@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -80,7 +82,7 @@ object Graph {
         }
         info.map(i => i.memSize + i.diskSize).filter(_ > 0L)
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** [[compactFrontier]] sized from the checkpoint's OBSERVED cached
     * bytes (guide §1: gate on measured size) instead of a row count —

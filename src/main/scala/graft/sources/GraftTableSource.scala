@@ -15,6 +15,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.streaming.Streaming
+import graft.table.ManifestEntry
+import graft.table.ManifestEntry.dirOf
 
 /** The TABLE-FORMAT connector over the graft manifest protocol (r16
   * judge #3: "the storage layer is invisible to Catalyst/SQL"):
@@ -34,7 +36,7 @@ import graft.streaming.Streaming
   *    filters (`=`, `<`, `<=`, `>`, `>=`, `IN`, and their
   *    conjunctions) are translated to zone-map ranges and pruned
   *    against the manifest's per-file bounds
-  *    ([[Streaming.zoneMapFilesAt]]) before Spark lists a single path
+  *    ([[Streaming.zoneMapKeep]]) before Spark lists a single path
   *    — the same lossless metadata prune `readCommittedRange` does,
   *    now owned by the optimizer instead of the caller;
   *  - COLUMN PRUNING, predicate pushdown into parquet row groups,
@@ -95,7 +97,7 @@ class GraftTableSource extends RelationProvider
       // library reader's retained-footer schema.
       val spark = sqlContext.sparkSession
       val idx = new GraftFileIndex(spark, target, None, applyingDv = true)
-      if (idx.entryLines.isEmpty) Streaming.readCommitted(spark, target).schema
+      if (idx.entries.isEmpty) Streaming.readCommitted(spark, target).schema
       else org.apache.spark.sql.types.StructType(
         idx.dataSchema.fields ++ idx.partitionSchema.fields
           .filterNot(f => idx.dataSchema.fieldNames.contains(f.name)))
@@ -202,7 +204,7 @@ class GraftTableSource extends RelationProvider
         // no schema to drift against: skip the check rather than throw
         // an unrelated connector error.
         val current = new GraftFileIndex(spark, target, None, applyingDv = true)
-        if (current.entryLines.nonEmpty) {
+        if (current.entries.nonEmpty) {
           val have = (current.dataSchema.fields ++ current.partitionSchema.fields)
             .map(f => (f.name, f.dataType)).toSet
           val incoming = data.schema.fields.map(f => (f.name, f.dataType)).toSet
@@ -358,7 +360,7 @@ private[graft] class GraftDvRelation(
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,
       options = parameters)(spark)
-    Streaming.applyDeleteVectors(spark, target, index.entryLines,
+    Streaming.applyDeleteVectors(spark, target, index.entries,
       spark.baseRelationToDataFrame(inner))
   }
 
@@ -467,10 +469,10 @@ class GraftFileIndex(
       s"no committed graft manifest at $target — not a graft table " +
         "(write it with the Streaming verbs or Streaming.writeManifest first)"))
 
-  // the pinned generation's live entry LINES (metadata-only): paths
-  // plus stats/dv/schema-fingerprint tags
-  private[sources] val entryLines: Seq[String] =
-    Streaming.manifestEntryLines(fs, target, generation)
+  // the pinned generation's live entries (metadata-only), resolved
+  // ONCE: every pruning tier and the DV gate below work on them
+  private[sources] val entries: Seq[ManifestEntry] =
+    Streaming.generationEntries(fs, target, generation)
 
   // READER-VERSION gate: a plain file listing cannot apply
   // merge-on-read delete vectors — reading a tagged generation here
@@ -479,18 +481,13 @@ class GraftFileIndex(
   // the DV-applying relation ([[GraftDvRelation]], the r17 judge #3
   // rung) — then the anti-join owns correctness and the index is just
   // the pruned listing underneath it.
-  require(applyingDv || !Streaming.generationHasDeleteVectors(fs, target, generation),
+  require(applyingDv || !entries.exists(_.dv.isDefined),
     s"graft table $target generation $generation carries merge-on-read delete " +
       "vectors, which the format connector cannot apply — run " +
       "Streaming.compactShards to absorb them, or read via Streaming.readCommitted")
 
   // the pinned generation's live files, relative paths (metadata-only)
-  private val allFiles: Seq[String] = entryLines.map(Streaming.relOfEntry)
-
-  private def dirOf(rel: String): String = {
-    val i = rel.lastIndexOf('/')
-    if (i < 0) "" else rel.substring(0, i)
-  }
+  private val allFiles: Seq[String] = entries.map(_.path)
 
   // hive-style partition layout, MULTI-LEVEL (r17 advice, medium: the
   // write path documents partitionBy("a,b") but a single-level parser
@@ -587,9 +584,9 @@ class GraftFileIndex(
   lazy val dataSchema: StructType = {
     require(allFiles.nonEmpty, s"graft table $target generation $generation " +
       "has no live files")
-    val byHash = entryLines.groupBy(Streaming.entrySchemaHash)
-    val known = byHash.collect { case (Some(_), ls) => Streaming.relOfEntry(ls.head) }.toSeq
-    val unknown = byHash.getOrElse(None, Nil).map(Streaming.relOfEntry)
+    val byHash = entries.groupBy(_.schemaHash)
+    val known = byHash.collect { case (Some(_), es) => es.head.path }.toSeq
+    val unknown = byHash.getOrElse(None, Nil).map(_.path)
     val sample: Seq[String] =
       if (unknown.isEmpty) known
       else known ++ unknown.groupBy(dirOf).values.map(_.head).toSeq.sorted.take(32)
@@ -609,26 +606,21 @@ class GraftFileIndex(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     // 1) zone-map file skipping from the pushed data filters
-    val ranges = GraftFileIndex.rangesOf(dataFilters)
-    val (zoneKept, total) =
-      if (ranges.isEmpty) (allFiles, allFiles.size)
-      else Streaming.zoneMapFilesAt(fs, target, generation, ranges)
+    val zoneKept = Streaming.zoneMapKeep(entries, GraftFileIndex.rangesOf(dataFilters))
     // 2) bloom file skipping for point probes (=, IN) on indexed
     // columns — the tier that prunes where min/max cannot (a
     // high-cardinality key's bounds span every probe); untagged
     // columns/files pass through unchanged
-    val points = GraftFileIndex.pointsOf(dataFilters)
-    val bloomKept = points.foldLeft(zoneKept) { case (acc, (column, values)) =>
-      Streaming.bloomPruneFiles(spark, fs, target, generation, column, values, acc)
+    val bloomKept = GraftFileIndex.pointsOf(dataFilters).foldLeft(zoneKept) {
+      case (acc, (column, values)) => Streaming.bloomKeep(spark, target, acc, column, values)
     }
     // 3) null-test pruning from the recorded per-file null counts
-    val kept = GraftFileIndex.nullTestsOf(dataFilters)
-      .foldLeft(bloomKept) { case (acc, (column, isNull)) =>
-        Streaming.nullPruneFiles(fs, target, generation, column, isNull, acc)
-      }
-    lastPruning = Some((kept.size, total))
-    // 2) hive partition pruning from the partition filters
-    val byDir = kept.groupBy(dirOf).toSeq.sortBy(_._1)
+    val kept = GraftFileIndex.nullTestsOf(dataFilters).foldLeft(bloomKept) {
+      case (acc, (column, isNull)) => Streaming.nullKeep(acc, column, isNull)
+    }
+    lastPruning = Some((kept.size, entries.size))
+    // 4) hive partition pruning from the partition filters
+    val byDir = kept.map(_.path).groupBy(dirOf).toSeq.sortBy(_._1)
     val pruned =
       if (partitionFilters.isEmpty || partitionSchema.isEmpty) byDir
       else {
@@ -873,7 +865,7 @@ private[sources] class GraftStreamSink(
         if (Streaming.manifestGenerations(fs, target).nonEmpty &&
             !parameters.get("allowSchemaEvolution").exists(_.toBoolean)) {
           val current = new GraftFileIndex(spark, target, None, applyingDv = true)
-          if (current.entryLines.nonEmpty) {
+          if (current.entries.nonEmpty) {
             val have = (current.dataSchema.fields ++ current.partitionSchema.fields)
               .map(f => (f.name, f.dataType)).toSet
             val incoming = batch.schema.fields.map(f => (f.name, f.dataType)).toSet

@@ -2,9 +2,15 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.table.{ColumnStats, EntryTag, ManifestEntry, ManifestLine}
+import graft.table.ManifestEntry.dirOf
+import graft.table.ManifestLine.{Add, Bare, DirRef, Header, Modify, Remove}
 
 /** Structured Streaming surface.
   *
@@ -461,15 +467,12 @@ object Streaming {
               "its partition-directory name is not safely derivable")
         }
         val dirs = shardVals.map(v => s"$shardCol=$v").toSet
-        val lines = entriesForDirs(fs, target, g, Some(dirs))
-        if (lines.isEmpty) None
+        val entries = entriesForDirs(fs, target, g, Some(dirs))
+        if (entries.isEmpty) None
         else {
           // DV-applied: an upsert merging a shard that took a
           // merge-on-read delete must NOT resurrect the deleted rows
-          val df = applyDeleteVectors(spark, target, lines,
-            spark.read.option("basePath", target)
-              .option("mergeSchema", mergeSchema.toString)
-              .parquet(lines.map(l => s"$target/${entryPath(l)}"): _*))
+          val df = readEntries(spark, target, entries, mergeSchema)
           Some(if (wantCols.isEmpty) df else df.select(wantCols.map(col): _*))
         }
       case Some(_) => None // manifest exists but empty: no rows anywhere
@@ -516,11 +519,6 @@ object Streaming {
     */
   val ManifestKeep = 3
 
-  private def dirOf(rel: String): String = {
-    val i = rel.lastIndexOf('/')
-    if (i < 0) "" else rel.substring(0, i)
-  }
-
   /** Recursive data-file listing under `p`, paths relative to it;
     * `_`/`.`-prefixed names (markers, temp files, manifest dirs)
     * skipped.
@@ -565,7 +563,7 @@ object Streaming {
       baseGen: Option[Long] = None,
       tag: Option[String] = None,
       txn: Option[(String, Long)] = None,
-      modifiedEntries: Seq[String] = Nil,
+      modifiedEntries: Seq[ManifestEntry] = Nil,
       volatileDirs: Set[String] = Set.empty,
       keyEnvelopes: Seq[(String, Char, String, String)] = Nil
   ): Unit = {
@@ -596,7 +594,7 @@ object Streaming {
             def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
             s"E ${enc(c)}:$k:${enc(lo)}:${enc(hi)}"
         } ++
-        modifiedEntries.sorted.map(m => s"M $m") ++
+        modifiedEntries.sortBy(_.path).map(m => s"M ${m.render}") ++
         files.sorted.map(f => s"F $f"))
         .mkString("\n")
     val tmp = new org.apache.hadoop.fs.Path(stage, ".plan.tmp")
@@ -690,9 +688,9 @@ object Streaming {
     // this plan's position scan depends on without replacing its
     // files — conflict-checked like a replaced dir (a racing rewrite
     // invalidates the scanned positions), but its entries survive.
-    val modifiedByPath: Map[String, String] = lines.collect {
-      case l if l.startsWith("M ") => entryPath(l.substring(2)) -> l.substring(2)
-    }.toMap
+    val modifiedByPath: Map[String, ManifestEntry] = lines.collect {
+      case l if l.startsWith("M ") => ManifestEntry.parse(l.substring(2))
+    }.map(e => e.path -> e).toMap
     val volatileDirs = lines.collect { case l if l.startsWith("V ") => l.substring(2) }.toSet
     val keyEnvelopes: Seq[(String, Char, String, String)] = lines.collect {
       case "E *" => ("*", '*', "", "")
@@ -732,7 +730,7 @@ object Streaming {
     lazy val footers = inParallel(files.sorted) { f =>
       f -> footerInfo(fs, new org.apache.hadoop.fs.Path(targetPath, f))
     }
-    lazy val addLines = footers.map { case (f, info) => entryLineOf(f, info) }
+    lazy val addEntries = footers.map { case (f, info) => entryOf(f, info) }
     lazy val commitSchema = footers.flatMap(_._2.map(_.schemaHash)).headOption
     // abort: remove this plan's already-moved files and the stage, so
     // the verb's retry starts clean — but NEVER a file some RETAINED
@@ -759,13 +757,12 @@ object Streaming {
     lazy val touchedDirs: Set[String] =
       replacedDirs ++ volatileDirs ++ files.map(dirOf) ++
         modifiedByPath.keysIterator.map(dirOf)
-    lazy val addsByDir: Map[String, Seq[String]] =
-      addLines.groupBy(l => dirOf(entryPath(l)))
+    lazy val addsByDir: Map[String, Seq[ManifestEntry]] = addEntries.groupBy(_.dir)
     var done = false
     while (!done) {
       val prevGen = manifestGenerations(fs, target).lastOption
-      // base entries of the TOUCHED dirs only, keyed by path with the
-      // full entry lines as values (carried stats stay verbatim). The
+      // base entries of the TOUCHED dirs only (carried stats and tags
+      // stay verbatim). The
       // manifest-list layout makes this O(touched), never the table's
       // entry list — the last O(table) driver term of the protocol
       // (r15 judge #3). Bootstrap is the exception: the first commit
@@ -776,48 +773,45 @@ object Streaming {
       // atomicClaim; the loser loops, re-reads the winner's
       // checkpoint, and rebases through the steady-state path. The
       // winner's live-tree listing may have captured SOME of the
-      // loser's mid-move files as bare legacy lines — dedupeByPath
+      // loser's mid-move files as bare legacy entries — dedupeByPath
       // below collapses those against the loser's own stats-bearing
-      // add lines, so no file is ever listed twice and no row lost
+      // add entries, so no file is ever listed twice and no row lost
       // (ConcurrentCommitSpec pins the two-writer fresh-table race).
-      val bootstrapAll: Option[Map[String, String]] = prevGen match {
+      val bootstrapAll: Option[Seq[ManifestEntry]] = prevGen match {
         case Some(_) => None
-        case None => Some((listRel(fs, targetPath).toSet -- files).map(p => p -> p).toMap)
+        case None => Some((listRel(fs, targetPath).toSet -- files).toSeq.map(ManifestEntry(_)))
       }
-      val baseTouched: Map[String, String] = bootstrapAll match {
-        case Some(all) => all.filter { case (p, _) => touchedDirs(dirOf(p)) }
+      val baseTouched: Seq[ManifestEntry] = bootstrapAll match {
+        case Some(all) => all.filter(e => touchedDirs(e.dir))
         case None => entriesForDirs(fs, target, prevGen.get, Some(touchedDirs))
-          .map(l => entryPath(l) -> l).toMap
       }
       // one grouping pass over the touched base, reused by the post
       // state and the replay check (not a rescan per dir)
-      val baseLinesByDir: Map[String, Seq[String]] = baseTouched.toSeq
-        .groupBy { case (p, _) => dirOf(p) }
-        .map { case (d, xs) => d -> xs.map(_._2) }
-      // post-commit entry lines per touched dir: a replaced dir keeps
+      val baseByDir: Map[String, Seq[ManifestEntry]] = baseTouched.groupBy(_.dir)
+      // post-commit entries per touched dir: a replaced dir keeps
       // only this commit's adds; any other touched dir appends them
-      val postTouched: Map[String, Seq[String]] = touchedDirs.iterator.map { d =>
+      val postTouched: Map[String, Seq[ManifestEntry]] = touchedDirs.iterator.map { d =>
         val kept =
           if (replacedDirs(d)) Seq.empty
-          else baseLinesByDir.getOrElse(d, Seq.empty)
+          else baseByDir.getOrElse(d, Seq.empty)
             // in-place modifications (DV retags riding with this plan)
-            .map(l => modifiedByPath.getOrElse(entryPath(l), l))
-        d -> dedupeByPath(kept ++ addsByDir.getOrElse(d, Seq.empty)).sorted
+            .map(e => modifiedByPath.getOrElse(e.path, e))
+        d -> dedupeByPath(kept ++ addsByDir.getOrElse(d, Seq.empty)).sortBy(_.path)
       }.toMap
       // ALREADY COMMITTED (an interrupted commit's replay): every
       // touched dir carries exactly its planned post state — untouched
-      // dirs are unchanged by construction. Full-LINE comparison, not
+      // dirs are unchanged by construction. Full-ENTRY comparison, not
       // path sets: a plan whose only effect is an in-place DV retag
       // changes no path set, and a path-only test would read its replay
-      // as "already landed" before it ever committed. (Line equality is
-      // deterministic: footer stats re-read from the same files render
-      // the same entry lines the landed commit recorded.) This MUST run
+      // as "already landed" before it ever committed. (Entry equality is
+      // deterministic: footer stats re-read from the same files give
+      // the same entries the landed commit recorded.) This MUST run
       // before the staleness scan: a crash between the manifest rename
       // and the stage delete leaves a plan whose own commit sits inside
       // the (baseGen, latest] window, and scanning first would read the
       // replay as a conflict and abort a commit that already LANDED.
       val already = prevGen.isDefined && touchedDirs.forall { d =>
-        baseLinesByDir.getOrElse(d, Seq.empty).sorted == postTouched(d)
+        baseByDir.getOrElse(d, Seq.empty).sortBy(_.path) == postTouched(d)
       }
       if (already) done = true
       else {
@@ -834,23 +828,16 @@ object Streaming {
         // a legacy flat checkpoint, a `# rebuild` — can no longer
         // prove disjointness and conflicts conservatively.
         baseGen.filter(bg => prevGen.exists(_ > bg)).foreach { bg =>
-          val changed: Option[Set[String]] =
-            ((bg + 1) to prevGen.get).foldLeft(Option(Set.empty[String])) { (acc, g) =>
-              for (a <- acc; d <- deltaDirsOf(fs, target, g)) yield a ++ d
-            }
-          changed match {
-            case None =>
-              abortConflict(s"the window (gen $bg, gen ${prevGen.get}] of $target cannot " +
-                "be scanned for conflicts (pruned, legacy, or rebuilt in between)")
-            case Some(ch) =>
-              // volatile dirs conflict like replaced ones: a plan whose
-              // position scan (DV retag) read them is stale if they
-              // changed, even though it replaces none of their files
-              val overlap = ch.intersect(replacedDirs ++ volatileDirs)
-              if (overlap.nonEmpty)
-                abortConflict(s"directories ${overlap.take(5).mkString(", ")} changed " +
-                  s"between read generation $bg and current ${prevGen.get}")
-          }
+          val window = windowDelta(fs, target, bg, prevGen.get).getOrElse(
+            abortConflict(s"the window (gen $bg, gen ${prevGen.get}] of $target cannot " +
+              "be scanned for conflicts (pruned, legacy, or rebuilt in between)"))
+          // volatile dirs conflict like replaced ones: a plan whose
+          // position scan (DV retag) read them is stale if they
+          // changed, even though it replaces none of their files
+          val overlap = changedDirs(window).intersect(replacedDirs ++ volatileDirs)
+          if (overlap.nonEmpty)
+            abortConflict(s"directories ${overlap.take(5).mkString(", ")} changed " +
+              s"between read generation $bg and current ${prevGen.get}")
           // KEY-ENVELOPE conflicts (r18 judge #6): the plan's
           // not-matched decisions assumed no live row holds a key
           // inside the envelope beyond what it scanned. A window
@@ -864,56 +851,42 @@ object Streaming {
           // wildcard (an un-pruned merge with an insert clause)
           // conflicts on any add outside the already-checked dirs.
           if (keyEnvelopes.nonEmpty) {
-            val windowAdds: Option[Seq[String]] =
-              ((bg + 1) to prevGen.get).foldLeft(Option(Seq.empty[String])) {
-                (acc, g) =>
-                  for (a <- acc; l <- deltaAddLinesOf(fs, target, g)) yield a ++ l
-              }
-            windowAdds match {
-              case None =>
-                abortConflict(s"the window (gen $bg, gen ${prevGen.get}] of $target " +
-                  "cannot be scanned for key-envelope conflicts")
-              case Some(adds) =>
-                val wildcard = keyEnvelopes.exists(_._1 == "*")
-                val typed = keyEnvelopes.filterNot(_._1 == "*")
-                val hit = adds.find { l =>
-                  if (wildcard) !(replacedDirs ++ volatileDirs)(dirOf(entryPath(l)))
-                  else {
-                    val b = entryBounds(l)
-                    typed.forall { case (c, k, lo, hi) =>
-                      b.get(c) match {
-                        case None => true // unprovable: conservative
-                        case Some((bk, mn, mx)) =>
-                          bk != k || boundsOverlapStr(k, mn, mx, lo, hi)
-                      }
-                    }
+            val wildcard = keyEnvelopes.exists(_._1 == "*")
+            val typed = keyEnvelopes.filterNot(_._1 == "*")
+            def bound(k: Char, v: String): Option[Any] =
+              Some(k match { case 'l' => v.toLong; case 'd' => v.toDouble; case _ => v })
+            val hit = window.collectFirst {
+              case Add(e) if (
+                if (wildcard) !(replacedDirs ++ volatileDirs)(e.dir)
+                else typed.forall { case (c, k, lo, hi) =>
+                  e.bounds.get(c) match {
+                    case None => true // unprovable: conservative
+                    case Some((bk, mn, mx)) =>
+                      bk != k || boundsOverlap(k, mn, mx, bound(k, lo), bound(k, hi))
                   }
-                }
-                hit.foreach(l => abortConflict(
-                  s"a concurrent commit added ${entryPath(l)} whose bounds " +
-                    "intersect this merge's key envelope — the staged " +
-                    "not-matched decisions are stale"))
+                }) => e
             }
+            hit.foreach(e => abortConflict(
+              s"a concurrent commit added ${e.path} whose bounds " +
+                "intersect this merge's key envelope — the staged " +
+                "not-matched decisions are stale"))
           }
         }
         val tombstones =
-          baseTouched.keySet.filter(p => replacedDirs(dirOf(p))) -- files
+          baseTouched.map(_.path).toSet.filter(p => replacedDirs(dirOf(p))) -- files
         val gen = prevGen.getOrElse(0L) + 1
         // bootstrap's first checkpoint must cover every dir, legacy
         // files included; steady state passes the touched dirs only
-        val postState: Map[String, Seq[String]] = bootstrapAll match {
+        val postState: Map[String, Seq[ManifestEntry]] = bootstrapAll match {
           case Some(all) =>
-            val keptAll = all.collect {
-              case (p, l) if !replacedDirs(dirOf(p)) => l
-            }.toSeq
-            (keptAll ++ addLines).groupBy(l => dirOf(entryPath(l)))
-              .map { case (d, ls) => d -> dedupeByPath(ls).sorted }
+            (all.filterNot(e => replacedDirs(e.dir)) ++ addEntries).groupBy(_.dir)
+              .map { case (d, es) => d -> dedupeByPath(es).sortBy(_.path) }
           case None => postTouched
         }
         if (tryCommitManifest(fs, target, gen, postState,
-            tombstones.toSeq.sorted, addLines, schemaHash = commitSchema,
+            tombstones.toSeq.sorted, addEntries, schemaHash = commitSchema,
             tag = commitTagOpt, txn = commitTxnOpt,
-            modified = modifiedByPath.values.toSeq.sorted)) done = true
+            modified = modifiedByPath.values.toSeq.sortBy(_.path))) done = true
         // else: lost the CAS to a concurrent commit at `gen` — loop.
         // The staleness check above re-runs against the new latest
         // (baseGen is fixed), so an overlapping winner aborts and a
@@ -926,46 +899,17 @@ object Streaming {
     fs.delete(stage, true)
   }
 
-  /** Collapse duplicate entry lines for the same file path, keeping
-    * the most informative one (a stats-bearing `path\trows[\tbounds]`
-    * line is strictly longer than a bare legacy `path` line). The
-    * only legitimate source of duplicates is the concurrent-bootstrap
-    * window: a racing first-committer's live-tree listing captures
-    * another writer's mid-move files as bare lines, and that writer's
-    * own rebase then re-adds them with footer stats.
+  /** Collapse duplicate entries for the same file path, keeping the
+    * most informative one (a stats-bearing entry renders strictly
+    * longer than a bare legacy `path` one). The only legitimate source
+    * of duplicates is the concurrent-bootstrap window: a racing
+    * first-committer's live-tree listing captures another writer's
+    * mid-move files as bare entries, and that writer's own rebase then
+    * re-adds them with footer stats.
     */
-  private def dedupeByPath(lines: Seq[String]): Seq[String] =
-    if (lines.lengthCompare(lines.iterator.map(entryPath).toSet.size) == 0) lines
-    else lines.groupBy(entryPath).valuesIterator.map(_.maxBy(_.length)).toSeq
-
-  /** Parse an entry line's DELETE-VECTOR tag — a trailing
-    * `dv:<sidecar>:<n>` field appended by [[deleteWhere]]: `sidecar`
-    * is a manifest-dir parquet file of (rel, pos) deleted row
-    * positions covering this entry COMPLETELY (merge-on-write: a
-    * re-delete unions the prior positions into its new sidecar), `n`
-    * their count. Every stats parser skips fields it does not
-    * recognize, so DV-free tables are byte-identical to before.
-    */
-  private[graft] def entryDv(line: String): Option[(String, Long)] =
-    line.split('\t').iterator.flatMap { f =>
-      // STRUCTURAL disambiguation (r17 advice, low): a real dv tag is
-      // exactly `dv:<sidecar>:<n>` — 3 colon parts with a numeric
-      // count. A BOUNDS field whose first zone-mapped column is
-      // literally named "dv" starts with "dv:" too but its tokens
-      // carry 4-5 colon parts (and commas), so the shape test keeps
-      // a hostile column name from misparsing as a sidecar reference.
-      if (!f.startsWith("dv:")) None
-      else f.split(':') match {
-        case Array(_, sidecar, n) if n.forall(_.isDigit) && !sidecar.contains(',') =>
-          Some((sidecar, n.toLong))
-        case _ => None
-      }
-    }.nextOption()
-
-  /** `line` with its dv tag replaced (or appended). */
-  private def withDvTag(line: String, sidecar: String, n: Long): String =
-    (line.split('\t').filterNot(_.startsWith("dv:")) :+ s"dv:$sidecar:$n")
-      .mkString("\t")
+  private def dedupeByPath(entries: Seq[ManifestEntry]): Seq[ManifestEntry] =
+    if (entries.lengthCompare(entries.iterator.map(_.path).toSet.size) == 0) entries
+    else entries.groupBy(_.path).valuesIterator.map(_.maxBy(_.render.length)).toSeq
 
   /** True when any live entry of `gen` carries a delete-vector tag —
     * the reader-version probe: a consumer that cannot apply DVs (the
@@ -977,91 +921,21 @@ object Streaming {
       target: String,
       gen: Long
   ): Boolean =
-    manifestEntryLines(fs, target, gen).exists(l => entryDv(l).isDefined)
+    generationEntries(fs, target, gen).exists(_.dv.isDefined)
 
-  /** The path half of a manifest entry line
-    * (`path`, `path\trows` or `path\trows\tbounds`).
+  /** The manifest entry of one committed file: the relative path, then
+    * (when the footer was readable) its row count, zone-map stats and
+    * its OWN schema fingerprint (r17 advice, low: the per-commit
+    * `# schema` header records only each commit's fingerprint, so a
+    * single-footer reader on a table widened via allowSchemaEvolution
+    * could silently sample a pre-widening file; the per-entry tag lets
+    * any reader detect a mixed-schema generation from metadata alone
+    * and switch to a merged inference).
     */
-  private def entryPath(line: String): String = {
-    val i = line.indexOf('\t')
-    if (i < 0) line else line.substring(0, i)
-  }
-
-  /** [[entryPath]] for the connector package. */
-  private[graft] def relOfEntry(line: String): String = entryPath(line)
-
-  /** Render one manifest entry line: the relative path, then (when the
-    * footer was readable) its row count, then (when any column had
-    * complete chunk statistics) its zone-map bounds.
-    */
-  private def entryLineOf(f: String, info: Option[FooterStats]): String =
-    info match {
-      case None => f
-      // `sh:<8hex>` — the file's OWN schema fingerprint as a trailing
-      // tag field (r17 advice, low: the per-commit `# schema` header
-      // records only each commit's fingerprint, so a single-footer
-      // reader on a table widened via allowSchemaEvolution could
-      // silently sample a pre-widening file; the per-entry tag lets
-      // any reader detect a mixed-schema generation from metadata
-      // alone and switch to a merged inference). Tag fields after the
-      // bounds are prefix-scanned, so every existing parser skips it.
-      case Some(i) if i.bounds.isEmpty => s"$f\t${i.rows}\t\tsh:${i.schemaHash}"
-      case Some(i) => s"$f\t${i.rows}\t${i.bounds}\tsh:${i.schemaHash}"
+  private def entryOf(f: String, info: Option[FooterStats]): ManifestEntry =
+    info.fold(ManifestEntry(f)) { i =>
+      ManifestEntry(f, Some(i.rows), Some(i.stats), Seq(EntryTag.SchemaHash(i.schemaHash)))
     }
-
-  /** Decode an entry line's zone map: column -> (kind, min, max),
-    * fields URL-decoded. Empty for stat-less (legacy) entries.
-    */
-  private[graft] def entryBounds(line: String): Map[String, (Char, String, String)] = {
-    val parts = line.split('\t')
-    if (parts.length < 3) Map.empty
-    else parts(2).split(',').iterator.flatMap { tok =>
-      def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-      tok.split(':') match {
-        // `z` tokens are all-null markers (no values) — null counts
-        // only, never value bounds
-        case Array(n, k, lo, hi) if k.length == 1 && k != "z" =>
-          Some(dec(n) -> (k.head, dec(lo), dec(hi)))
-        case Array(n, k, lo, hi, _) if k.length == 1 && k != "z" =>
-          Some(dec(n) -> (k.head, dec(lo), dec(hi)))
-        case _ => None
-      }
-    }.toMap
-  }
-
-  /** An entry's OWN schema fingerprint (`sh:<hash>` tag field), when
-    * recorded. None on pre-r18 entries — readers treat an unknown
-    * fingerprint conservatively (it may differ from every known one).
-    * Same structural test as [[entryDv]]: a real tag has exactly 2
-    * colon parts, so a bounds field led by a column named "sh"
-    * (4-5 colon parts per token) never misparses.
-    */
-  private[graft] def entrySchemaHash(line: String): Option[String] =
-    line.split('\t').iterator.flatMap { f =>
-      if (!f.startsWith("sh:")) None
-      else f.split(':') match {
-        case Array(_, h) if !h.contains(',') => Some(h)
-        case _ => None
-      }
-    }.nextOption()
-
-  /** Per-column NULL COUNTS from an entry's zone-map tokens — the
-    * 5th field of `n:k:lo:hi:nc`, or the count of an all-null
-    * `n:z:::nc` marker. A column absent here has an UNKNOWABLE null
-    * count (some chunk lacked the statistic) and can never null-prune.
-    */
-  private[graft] def entryNullCounts(line: String): Map[String, Long] = {
-    val parts = line.split('\t')
-    if (parts.length < 3) Map.empty
-    else parts(2).split(',').iterator.flatMap { tok =>
-      tok.split(':') match {
-        case Array(n, k, _, _, nc) if k.length == 1 =>
-          scala.util.Try(nc.toLong).toOption
-            .map(java.net.URLDecoder.decode(n, "UTF-8") -> _)
-        case _ => None
-      }
-    }.toMap
-  }
 
   /** Row count, schema fingerprint AND per-column min/max bounds from
     * a parquet file's FOOTER — one metadata read, no data pages. None
@@ -1076,7 +950,7 @@ object Streaming {
     * chunk statistics are complete — [[readCommittedRange]] prunes
     * files against them before Spark ever lists a path.
     */
-  private case class FooterStats(rows: Long, schemaHash: String, bounds: String)
+  private case class FooterStats(rows: Long, schemaHash: String, stats: Seq[ColumnStats])
 
   private def footerInfo(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -1090,7 +964,7 @@ object Streaming {
           r.getFooter.getFileMetaData.getSchema.toString)}%08x",
         columnBoundsOf(r)))
       finally r.close()
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Longest string bound recorded in a manifest entry — longer values
     * simply drop that column's zone map for the file (the file is then
@@ -1099,22 +973,20 @@ object Streaming {
     */
   private val MaxStringBound = 64
 
-  /** Encode the file's per-column bounds as
-    * `name:kind:min:max[,...]` — kind `l` (integral), `d` (floating),
-    * `s` (UTF-8 string); every field URL-encoded so separators can
-    * never collide with values. A column is recorded only when EVERY
+  /** The file's per-column zone-map stats — kind `l` (integral), `d`
+    * (floating), `s` (UTF-8 string). A column is recorded only when EVERY
     * row group carries usable statistics for it (a single stats-less
     * chunk makes the file unboundable on that column — it must never
     * be pruned). All-null chunks contribute no values; nulls never
     * satisfy a range predicate, so bounds over non-null values prune
     * soundly.
     */
-  private def columnBoundsOf(r: org.apache.parquet.hadoop.ParquetFileReader): String = {
+  private def columnBoundsOf(r: org.apache.parquet.hadoop.ParquetFileReader): Seq[ColumnStats] = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     val blocks = r.getFooter.getBlocks.asScala
-    if (blocks.isEmpty) return ""
+    if (blocks.isEmpty) return Nil
     // name -> (kind, Option(min, max), Option(nullCount)); removed
     // (and blacklisted) on any unusable chunk. A column with a null
     // count but NO values (all rows null) is still recorded — as a
@@ -1203,20 +1075,16 @@ object Streaming {
         }
       } else if (path.length != 1) () // nested: never recorded
     }
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     // cap the recorded columns (schema order): a 500-column table must
     // not turn its manifest into a stats dump — the leading columns
-    // are where keys and cluster dimensions live by convention.
-    // Token shapes: `n:k:lo:hi:nc` (bounds + null count),
-    // `n:k:lo:hi` (bounds, count unknowable), `n:z:::nc` (ALL rows
-    // null — no values, count only). A column with neither is omitted.
+    // are where keys and cluster dimensions live by convention. An
+    // all-null column records its null count only; a column with
+    // neither bounds nor a count is omitted.
     bounds.take(MaxBoundColumns).flatMap {
-      case (n, (k, Some((lo, hi)), nc)) =>
-        val base = s"${enc(n)}:$k:${enc(lo.toString)}:${enc(hi.toString)}"
-        Some(nc.fold(base)(c => s"$base:$c"))
-      case (n, (_, None, Some(c))) => Some(s"${enc(n)}:z:::$c")
+      case (n, (k, Some((lo, hi)), nc)) => Some(ColumnStats(n, k, lo.toString, hi.toString, nc))
+      case (n, (_, None, Some(c))) => Some(ColumnStats.allNull(n, c))
       case _ => None
-    }.mkString(",")
+    }.toSeq
   }
 
   /** Most columns recorded per entry's zone map (schema order). */
@@ -1227,11 +1095,6 @@ object Streaming {
     case 'd' => a.asInstanceOf[Double] < b.asInstanceOf[Double]
     case _ => utf8Lt(a.asInstanceOf[String], b.asInstanceOf[String])
   }
-
-  private def rowCountOf(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path
-  ): Option[Long] = footerInfo(fs, p).map(_.rows)
 
   /** Heal an interrupted commit at `target`: a stage carrying the plan
     * rolls FORWARD (the staged files are complete — finish the moves
@@ -1298,7 +1161,7 @@ object Streaming {
     */
   def refreshListing(target: String): Unit =
     try org.apache.spark.sql.SparkSession.active.catalog.refreshByPath(target)
-    catch { case _: Throwable => () } // no active session: nothing cached
+    catch { case NonFatal(_) => () } // no active session: nothing cached
 
   // ------------------------------------------------------------------
   // Committed manifests — the reader-visible commit point. Every
@@ -1361,8 +1224,8 @@ object Streaming {
     * is O(touched) at every cadence. Checkpoints ALSO carry their own
     * commit's `+`/`-` delta lines, so conflict scans (the staleness
     * check in executeCommit) stay exact across checkpoint generations.
-    * `postState` maps each TOUCHED dir to its full post-commit entry
-    * lines — for a forced checkpoint (bootstrap / wholesale rebuild,
+    * `postState` maps each TOUCHED dir to its full post-commit
+    * entries — for a forced checkpoint (bootstrap / wholesale rebuild,
     * which has no delta basis) it must cover every dir, and the file
     * records `# rebuild` so a conflict scan crossing it refuses
     * conservatively instead of reading "nothing changed".
@@ -1378,12 +1241,12 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long,
-      postState: Map[String, Seq[String]],
+      postState: Map[String, Seq[ManifestEntry]],
       tombstones: Seq[String],
-      adds: Seq[String],
+      adds: Seq[ManifestEntry],
       forceCheckpoint: Boolean = false,
       schemaHash: Option[String] = None,
-      modified: Seq[String] = Nil,
+      modified: Seq[ManifestEntry] = Nil,
       tag: Option[String] = None,
       txn: Option[(String, Long)] = None
   ): Boolean = {
@@ -1427,23 +1290,22 @@ object Streaming {
       case Some((scope, id)) =>
         inheritedTxns.updated(scope, math.max(id, inheritedTxns.getOrElse(scope, Long.MinValue)))
     }
-    val header = schemaHash.toSeq.map(h => s"# schema $h") ++
-      tag.toSeq.map(t => s"# tag $t") ++
-      txns.toSeq.sortBy(_._1).map { case (s, i) => s"# txn $s $i" } ++
-      (if (forceCheckpoint) Seq("# rebuild") else Nil)
+    val header = schemaHash.toSeq.map(Header.schema) ++
+      tag.toSeq.map(Header.tag) ++
+      txns.toSeq.sortBy(_._1).map { case (s, i) => Header.txn(s, i) } ++
+      (if (forceCheckpoint) Seq(Header.Rebuild) else Nil)
     // `~` = entry modified in place (a delete-vector tag): the full
-    // new entry line rides in the delta so chains reconstruct and
+    // new entry rides in the delta so chains reconstruct and
     // conflict scans see the dir changed without any file add
-    val delta = tombstones.map(t => s"- $t") ++ adds.map(a => s"+ $a") ++
-      modified.map(m => s"~ $m")
+    val delta = tombstones.map(Remove) ++ adds.map(Add) ++ modified.map(Modify)
     // per-dir manifests written by THIS attempt — deleted on a lost CAS
     val written = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
     val (prefix, body) =
       if (checkpoint)
-        ("gen", header ++ checkpointRefLines(fs, target, gen, postState, token, written) ++ delta)
+        ("gen", header ++ checkpointRefs(fs, target, gen, postState, token, written) ++ delta)
       else ("inc", header ++ delta)
     val tmp = new org.apache.hadoop.fs.Path(mdir, s".$prefix-$gen.tmp-$token")
-    writeLines(fs, tmp, body)
+    writeLines(fs, tmp, body.map(_.render))
     val dst = new org.apache.hadoop.fs.Path(mdir, f"$prefix-$gen%012d")
     val twin = new org.apache.hadoop.fs.Path(mdir,
       f"${if (checkpoint) "inc" else "gen"}-$gen%012d")
@@ -1472,7 +1334,7 @@ object Streaming {
     }
   }
 
-  /** Build a checkpoint's `@ dir\tm-file` reference lines: reuse the
+  /** Build a checkpoint's `@ dir\tm-file` references: reuse the
     * previous checkpoint's reference for every directory untouched
     * since it, write a fresh per-dir manifest for the dirty ones. The
     * dirty set is the union of the intervening deltas' touched dirs
@@ -1481,151 +1343,115 @@ object Streaming {
     * back to rewriting every dir from the reconstructed current state
     * — the one-time migration cost of an old-format table.
     */
-  private def checkpointRefLines(
+  private def checkpointRefs(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long,
-      postState: Map[String, Seq[String]],
+      postState: Map[String, Seq[ManifestEntry]],
       token: String,
       written: scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]
-  ): Seq[String] = {
+  ): Seq[DirRef] = {
     val mdir = manifestDir(target)
     // write the dirty dirs' per-dir manifests on the commit pool: each
     // is an independent create of a uniquely-named file (no rename
     // dance; a crashed or losing attempt's orphan is swept by
     // pruneManifests once its generation ages past the horizon) — a
     // 500-dir bootstrap writes them in O(dirs / threads), not serially
-    def writeDirManifests(dirty: Seq[(String, Seq[String])]): Seq[(String, String)] = {
+    def writeDirManifests(dirty: Seq[(String, Seq[ManifestEntry])]): Seq[DirRef] = {
       val named = dirty.filter(_._2.nonEmpty).sortBy(_._1).zipWithIndex
         .map { case ((d, es), i) => (d, es, f"m-$gen%012d-$token-$i") }
       named.foreach { case (_, _, n) =>
         written += new org.apache.hadoop.fs.Path(mdir, n)
       }
       inParallel(named) { case (d, es, n) =>
-        writeLines(fs, new org.apache.hadoop.fs.Path(mdir, n), es.sorted)
-        d -> n
+        writeLines(fs, new org.apache.hadoop.fs.Path(mdir, n), es.sortBy(_.path).map(_.render))
+        DirRef(d, n)
       }
     }
     val prevCkpt = checkpointGens(fs, target).filter(_ < gen).lastOption
-    val refs: Seq[(String, String)] = prevCkpt match {
+    prevCkpt match {
       case None => // first checkpoint: postState covers the whole table
         writeDirManifests(postState.toSeq)
       case Some(pc) =>
         // dirs whose state changed in (pc, gen): the intervening deltas'
         // dirs (None = unscannable) plus this commit's touched dirs
-        val dirtyBetween: Option[Set[String]] =
-          ((pc + 1) until gen).foldLeft(Option(Set.empty[String])) { (acc, g) =>
-            for (a <- acc; d <- deltaDirsOf(fs, target, g)) yield a ++ d
-          }
+        val dirtyBetween = windowDelta(fs, target, pc, gen - 1).map(changedDirs)
         (readCheckpointRefs(fs, target, pc), dirtyBetween) match {
           case (Some(prevRefs), Some(between)) =>
             val dirty = between ++ postState.keySet
-            val clean = prevRefs.filterNot { case (d, _) => dirty(d) }
+            val clean = prevRefs.filterNot(r => dirty(r.dir))
             // dirty-but-untouched dirs keep their current (gen-1) state
             val untouched = dirty -- postState.keySet
-            val recon: Map[String, Seq[String]] =
+            val recon: Map[String, Seq[ManifestEntry]] =
               if (untouched.isEmpty) Map.empty
-              else entriesForDirs(fs, target, gen - 1, Some(untouched))
-                .groupBy(l => dirOf(entryPath(l)))
-            (clean ++ writeDirManifests((postState ++ recon).toSeq)).sortBy(_._1)
+              else entriesForDirs(fs, target, gen - 1, Some(untouched)).groupBy(_.dir)
+            (clean ++ writeDirManifests((postState ++ recon).toSeq)).sortBy(_.dir)
           case _ =>
             // legacy flat previous checkpoint (or pruned window): one
             // full rewrite, after which the table is on the new format
-            val all = entriesForDirs(fs, target, gen - 1, None)
-              .groupBy(l => dirOf(entryPath(l)))
+            val all = entriesForDirs(fs, target, gen - 1, None).groupBy(_.dir)
             writeDirManifests(((all -- postState.keySet) ++ postState).toSeq)
         }
     }
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    refs.map { case (d, m) => s"@ ${enc(d)}\t$m" }
   }
 
-  /** A retained checkpoint's dir -> per-dir-manifest references.
-    * None = the checkpoint is in LEGACY flat format (plain entry
-    * lines); an EMPTY new-format checkpoint (a table with zero live
-    * rows) returns Some(empty).
+  /** A retained checkpoint's per-dir-manifest references. None = the
+    * checkpoint is in LEGACY flat format (plain entry lines); an EMPTY
+    * new-format checkpoint (a table with zero live rows) returns
+    * Some(empty).
     */
   private def readCheckpointRefs(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Option[Seq[(String, String)]] = {
-    val lines = readManifestFile(fs,
-      new org.apache.hadoop.fs.Path(manifestDir(target), f"gen-$gen%012d"))
-    val plain = lines.filterNot(l =>
-      l.startsWith("# ") || l.startsWith("@ ") || l.startsWith("+ ") ||
-        l.startsWith("- ") || l.startsWith("~ "))
-    if (plain.nonEmpty) None // legacy flat entry list
-    else Some(lines.collect { case l if l.startsWith("@ ") =>
-      val t = l.substring(2).split('\t')
-      (java.net.URLDecoder.decode(t(0), "UTF-8"), t(1))
-    })
-  }
+  ): Option[Seq[DirRef]] = ManifestLine.dirRefs(readLines(fs, checkpointPath(target, gen)))
 
-  /** The directories touched by generation `gen`'s own commit, from
-    * its recorded `+`/`-` delta lines. None when the information is
-    * not available — the manifest file is gone, the checkpoint is
-    * legacy flat, or it is a `# rebuild` (writeManifest after a
-    * wholesale swap, whose physical delta is unknowable) — and a
+  private def checkpointPath(target: String, gen: Long) =
+    new org.apache.hadoop.fs.Path(manifestDir(target), f"gen-$gen%012d")
+
+  /** The manifest file committing generation `gen` (delta or
+    * checkpoint), if it is retained.
+    */
+  private def generationFile(
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: String,
+      gen: Long
+  ): Option[org.apache.hadoop.fs.Path] =
+    Seq(f"inc-$gen%012d", f"gen-$gen%012d")
+      .map(n => new org.apache.hadoop.fs.Path(manifestDir(target), n)).find(fs.exists)
+
+  /** The recorded delta lines (`+`/`-`/`~`, plus headers) of every
+    * generation in (`fromExclusive`, `toInclusive`]. None when some
+    * generation cannot be scanned exactly — its manifest file is gone,
+    * the checkpoint is legacy flat, or it is a `# rebuild` (writeManifest
+    * after a wholesale swap, whose physical delta is unknowable) — and a
     * conflict scan must then refuse conservatively.
     */
-  private def deltaDirsOf(
+  private def windowDelta(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
-      gen: Long
-  ): Option[Set[String]] = {
-    val mdir = manifestDir(target)
-    val p = Seq(f"inc-$gen%012d", f"gen-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n)).find(fs.exists)
-    p.flatMap { path =>
-      val lines = readManifestFile(fs, path)
-      val legacyCkpt = path.getName.startsWith("gen-") &&
-        lines.exists(l => !l.startsWith("# ") && !l.startsWith("@ ") &&
-          !l.startsWith("+ ") && !l.startsWith("- ") && !l.startsWith("~ "))
-      if (legacyCkpt || lines.contains("# rebuild")) None
-      else Some(lines.collect {
-        case l if l.startsWith("+ ") => dirOf(entryPath(l.substring(2)))
-        case l if l.startsWith("- ") => dirOf(l.substring(2))
-        // a DV delete changes a dir's LIVE ROWS without touching its
-        // file set — it must conflict a racing merge of that dir
-        case l if l.startsWith("~ ") => dirOf(entryPath(l.substring(2)))
-      }.toSet)
+      fromExclusive: Long,
+      toInclusive: Long
+  ): Option[Seq[ManifestLine]] =
+    ((fromExclusive + 1) to toInclusive).foldLeft(Option(Seq.empty[ManifestLine])) { (acc, g) =>
+      for {
+        a <- acc
+        p <- generationFile(fs, target, g)
+        lines = readLines(fs, p)
+        if ManifestLine.dirRefs(lines).isDefined && !lines.contains(Header.Rebuild)
+      } yield a ++ lines
     }
-  }
 
-  /** The full ADDED entry lines (`+ ` deltas) of one generation's
-    * commit — what the key-envelope conflict check inspects. None when
-    * the generation cannot be scanned exactly (legacy checkpoint,
-    * `# rebuild`, pruned), mirroring [[deltaDirsOf]].
+  /** The directories a delta touches. A DV retag (`~`) changes a dir's
+    * LIVE ROWS without touching its file set — it must conflict a
+    * racing merge of that dir.
     */
-  private def deltaAddLinesOf(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long
-  ): Option[Seq[String]] = {
-    val mdir = manifestDir(target)
-    val p = Seq(f"inc-$gen%012d", f"gen-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n)).find(fs.exists)
-    p.flatMap { path =>
-      val lines = readManifestFile(fs, path)
-      val legacyCkpt = path.getName.startsWith("gen-") &&
-        lines.exists(l => !l.startsWith("# ") && !l.startsWith("@ ") &&
-          !l.startsWith("+ ") && !l.startsWith("- ") && !l.startsWith("~ "))
-      if (legacyCkpt || lines.contains("# rebuild")) None
-      else Some(lines.collect { case l if l.startsWith("+ ") => l.substring(2) })
-    }
-  }
-
-  /** [[boundsOverlap]] with string-rendered query bounds (the plan's
-    * `E` line carrier format).
-    */
-  private def boundsOverlapStr(
-      kind: Char, mn: String, mx: String, lo: String, hi: String): Boolean =
-    kind match {
-      case 'l' => !(mx.toLong < lo.toLong || mn.toLong > hi.toLong)
-      case 'd' => !(mx.toDouble < lo.toDouble || mn.toDouble > hi.toDouble)
-      case _ => !(utf8Lt(mx, lo) || utf8Lt(hi, mn))
-    }
+  private def changedDirs(delta: Seq[ManifestLine]): Set[String] =
+    delta.collect {
+      case Add(e) => e.dir
+      case Remove(p) => dirOf(p)
+      case Modify(e) => e.dir
+    }.toSet
 
   /** A pluggable atomic-claim coordinator for stores whose rename is
     * NOT an atomic fail-if-exists operation (the Delta LogStore
@@ -1812,13 +1638,8 @@ object Streaming {
     val pendingDel: Set[String] =
       fs.listStatus(mdir).map(_.getPath.getName).filter(_.startsWith("del-"))
         .flatMap { n =>
-          val dp = new org.apache.hadoop.fs.Path(mdir, n)
-          try {
-            val buf = new Array[Byte](fs.getFileStatus(dp).getLen.toInt)
-            val in = fs.open(dp)
-            try in.readFully(buf) finally in.close()
-            new String(buf, "UTF-8").split("\n").filter(_.nonEmpty).toSeq
-          } catch { case _: java.io.FileNotFoundException => Nil }
+          try readManifestFile(fs, new org.apache.hadoop.fs.Path(mdir, n))
+          catch { case _: java.io.FileNotFoundException => Nil }
         }.toSet
     val now = System.currentTimeMillis()
     def aged(p: org.apache.hadoop.fs.Path): Boolean =
@@ -1888,12 +1709,8 @@ object Streaming {
       // the 2-writer ManifestScale storm after r18's commit-path
       // timing shifted)
       val relsOpt: Option[Seq[String]] =
-        try {
-          val buf = new Array[Byte](fs.getFileStatus(dp).getLen.toInt)
-          val in = fs.open(dp)
-          try in.readFully(buf) finally in.close()
-          Some(new String(buf, "UTF-8").split("\n").filter(_.nonEmpty).toSeq)
-        } catch { case _: java.io.FileNotFoundException => None }
+        try Some(readManifestFile(fs, dp))
+        catch { case _: java.io.FileNotFoundException => None }
       relsOpt.foreach { rels =>
       // ORPHAN GUARD: a del file whose commit never landed (writer died
       // between the del rename and the manifest CAS) or lost the CAS
@@ -1957,7 +1774,7 @@ object Streaming {
         // a vanished checkpoint retains nothing, so it contributes no
         // references — it must not fail a verb whose commit landed
         try readCheckpointRefs(fs, target, n.stripPrefix("gen-").toLong)
-          .getOrElse(Seq.empty).map(_._2)
+          .getOrElse(Seq.empty).map(_.file)
         catch {
           case _: java.io.FileNotFoundException => Nil
           case _: IllegalStateException => Nil
@@ -1985,9 +1802,7 @@ object Streaming {
     val footers = inParallel(listRel(fs, targetPath).sorted) { f =>
       f -> footerInfo(fs, new org.apache.hadoop.fs.Path(targetPath, f))
     }
-    val byDir = footers.map { case (f, info) => entryLineOf(f, info) }
-      .groupBy(l => dirOf(entryPath(l)))
-      .map { case (d, ls) => d -> ls.sorted }
+    val byDir = footers.map { case (f, info) => entryOf(f, info) }.groupBy(_.dir)
     val schema = footers.flatMap(_._2.map(_.schemaHash)).headOption
     // single-writer path by contract (fresh table / post-rebuild), but
     // the CAS loop keeps even a misuse linearizable
@@ -2039,22 +1854,26 @@ object Streaming {
     new String(buf, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
   }
 
-  /** The entry LINES (`path`, `path\trows` or `path\trows\tbounds`) of
-    * one retained generation: the nearest checkpoint at or below it
-    * (a MANIFEST LIST — its per-dir manifest files loaded in parallel,
-    * or a legacy flat entry list read verbatim) plus the intervening
-    * deltas (≤ CheckpointEvery small reads; `-` lines remove by path).
-    * Throws loudly for a pruned (or never-committed) generation — a
-    * time-travel read beyond the horizon must refuse, never silently
-    * read the wrong snapshot.
+  private def readLines(
+      fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path
+  ): Seq[ManifestLine] = readManifestFile(fs, p).map(ManifestLine.parse)
+
+  /** The live entries of one retained generation: the nearest
+    * checkpoint at or below it (a MANIFEST LIST — its per-dir manifest
+    * files loaded in parallel, or a legacy flat entry list read
+    * verbatim) plus the intervening deltas (≤ CheckpointEvery small
+    * reads; `-` lines remove by path). Throws loudly for a pruned (or
+    * never-committed) generation — a time-travel read beyond the
+    * horizon must refuse, never silently read the wrong snapshot.
     */
-  private[graft] def manifestEntryLines(
+  private[graft] def generationEntries(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Seq[String] = entriesForDirs(fs, target, gen, None)
+  ): Seq[ManifestEntry] = entriesForDirs(fs, target, gen, None)
 
-  /** [[manifestEntryLines]] RESTRICTED to `dirs` (None = all): the
+  /** [[generationEntries]] RESTRICTED to `dirs` (None = all): the
     * manifest-list layout makes this O(requested dirs' entries + #dir
     * refs + window deltas) — a shard-scoped verb on a million-file
     * table resolves its touched shards without ever materializing the
@@ -2065,29 +1884,27 @@ object Streaming {
       target: String,
       gen: Long,
       dirs: Option[Set[String]]
-  ): Seq[String] = {
+  ): Seq[ManifestEntry] = {
     val mdir = manifestDir(target)
     def refuse(): Nothing = throw new IllegalStateException(
       s"manifest generation $gen of $target is not retained " +
         s"(retained: ${manifestGenerations(fs, target).mkString(",")}) — " +
         s"the retention horizon is $ManifestKeep generations")
-    def wanted(d: String): Boolean = dirs.forall(_.contains(d))
-    val hasCkptAtGen = fs.exists(new org.apache.hadoop.fs.Path(mdir, f"gen-$gen%012d"))
+    def wanted(e: ManifestEntry): Boolean = dirs.forall(_.contains(e.dir))
+    val hasCkptAtGen = fs.exists(checkpointPath(target, gen))
     if (!hasCkptAtGen &&
         !fs.exists(new org.apache.hadoop.fs.Path(mdir, f"inc-$gen%012d"))) refuse()
     val base = checkpointGens(fs, target).filter(_ <= gen).lastOption.getOrElse(refuse())
-    val entries = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    readCheckpointRefs(fs, target, base) match {
+    val entries = scala.collection.mutable.LinkedHashMap.empty[String, ManifestEntry]
+    val ckpt = readLines(fs, checkpointPath(target, base))
+    ManifestLine.dirRefs(ckpt) match {
       case Some(refs) =>
-        val want = refs.filter { case (d, _) => wanted(d) }
-        inParallel(want) { case (_, m) =>
-          readManifestFile(fs, new org.apache.hadoop.fs.Path(mdir, m))
-        }.flatten.foreach(l => entries(entryPath(l)) = l)
+        val want = refs.filter(r => dirs.forall(_.contains(r.dir)))
+        inParallel(want) { r =>
+          readManifestFile(fs, new org.apache.hadoop.fs.Path(mdir, r.file)).map(ManifestEntry.parse)
+        }.flatten.foreach(e => entries(e.path) = e)
       case None => // legacy flat checkpoint
-        readManifestFile(fs, new org.apache.hadoop.fs.Path(mdir, f"gen-$base%012d"))
-          .filterNot(_.startsWith("# "))
-          .filter(l => wanted(dirOf(entryPath(l))))
-          .foreach(l => entries(entryPath(l)) = l)
+        ckpt.foreach { case Bare(e) if wanted(e) => entries(e.path) = e; case _ => () }
     }
     var g = base + 1
     while (g <= gen) {
@@ -2096,25 +1913,30 @@ object Streaming {
       // own generation (base == gen then); every intermediate must be
       // a delta — a hole means the chain was pruned out from under us
       if (!fs.exists(inc)) refuse()
-      readManifestFile(fs, inc).foreach { line =>
-        if (line.startsWith("+ ")) {
-          val l = line.substring(2)
-          if (wanted(dirOf(entryPath(l)))) entries(entryPath(l)) = l
-        } else if (line.startsWith("- ")) entries.remove(line.substring(2))
-        else if (line.startsWith("~ ")) {
-          // ENTRY MODIFIED in place (a delete-vector tag landed): same
-          // path, new line — distinct from `+` so followers never read
-          // the file's rows as newly added
-          val l = line.substring(2)
-          if (wanted(dirOf(entryPath(l)))) entries(entryPath(l)) = l
-        } else if (line.startsWith("# ")) () // header (schema fingerprint)
-        else throw new IllegalStateException(
-          s"malformed delta line in $inc: '$line'")
+      readLines(fs, inc).foreach {
+        case Add(e) => if (wanted(e)) entries(e.path) = e
+        case Remove(p) => entries.remove(p)
+        // ENTRY MODIFIED in place (a delete-vector tag landed): same
+        // path, new entry — distinct from `+` so followers never read
+        // the file's rows as newly added
+        case Modify(e) => if (wanted(e)) entries(e.path) = e
+        case _: Header => ()
+        case line => throw new IllegalStateException(
+          s"malformed delta line in $inc: '${line.render}'")
       }
       g += 1
     }
     entries.values.toSeq
   }
+
+  /** The header lines of generation `gen`'s own manifest file. */
+  private def commitHeaders(
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: String,
+      gen: Long
+  ): Seq[Header] =
+    generationFile(fs, target, gen).toSeq
+      .flatMap(p => readLines(fs, p).collect { case h: Header => h })
 
   /** The schema fingerprint recorded by generation `gen`'s commit (the
     * `# schema` header: a hash of the parquet schema its ADDED files
@@ -2127,14 +1949,7 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Option[String] = {
-    val mdir = manifestDir(target)
-    Seq(f"gen-$gen%012d", f"inc-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n))
-      .find(fs.exists)
-      .flatMap(p => readManifestFile(fs, p)
-        .collectFirst { case l if l.startsWith("# schema ") => l.stripPrefix("# schema ") })
-  }
+  ): Option[String] = commitHeaders(fs, target, gen).flatMap(_.schemaHash).headOption
 
   /** The idempotency TAG recorded by generation `gen`'s commit
     * (`# tag` header), if any — the streaming sink's
@@ -2146,14 +1961,7 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Option[String] = {
-    val mdir = manifestDir(target)
-    Seq(f"gen-$gen%012d", f"inc-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n))
-      .find(fs.exists)
-      .flatMap(p => readManifestFile(fs, p)
-        .collectFirst { case l if l.startsWith("# tag ") => l.stripPrefix("# tag ") })
-  }
+  ): Option[String] = commitHeaders(fs, target, gen).flatMap(_.tag).headOption
 
   /** The per-scope TRANSACTION high-water marks recorded by (and
     * inherited into) generation `gen`'s commit header (`# txn` lines)
@@ -2165,23 +1973,7 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Map[String, Long] = {
-    val mdir = manifestDir(target)
-    Seq(f"gen-$gen%012d", f"inc-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n))
-      .find(fs.exists)
-      .map(p => readManifestFile(fs, p).iterator
-        .takeWhile(_.startsWith("# "))
-        .filter(_.startsWith("# txn "))
-        .flatMap { l =>
-          l.stripPrefix("# txn ").split(' ') match {
-            case Array(scope, id) if id.forall(c => c.isDigit || c == '-') =>
-              scala.util.Try(id.toLong).toOption.map(scope -> _)
-            case _ => None
-          }
-        }.toMap)
-      .getOrElse(Map.empty)
-  }
+  ): Map[String, Long] = commitHeaders(fs, target, gen).flatMap(_.txn).toMap
 
   /** The durable high-water mark of transaction scope `scope`: the
     * max id any commit recorded under `# txn scope <id>`, read from
@@ -2204,7 +1996,7 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Seq[String] = manifestEntryLines(fs, target, gen).map(entryPath)
+  ): Seq[String] = generationEntries(fs, target, gen).map(_.path)
 
   /** The relative data-file PATHS of one retained generation,
     * restricted to `dirs` — O(requested dirs + #dir refs) under the
@@ -2216,7 +2008,7 @@ object Streaming {
       target: String,
       gen: Long,
       dirs: Set[String]
-  ): Seq[String] = entriesForDirs(fs, target, gen, Some(dirs)).map(entryPath)
+  ): Seq[String] = entriesForDirs(fs, target, gen, Some(dirs)).map(_.path)
 
   /** SUPERSET of the directory names holding live entries at `gen`:
     * the base checkpoint's ref dirs plus every dir added by the
@@ -2237,16 +2029,14 @@ object Streaming {
         s"manifest generation $gen of $target is not retained " +
           s"(retained: ${manifestGenerations(fs, target).mkString(",")}) — " +
           s"the retention horizon is $ManifestKeep generations"))
-    val fromCkpt: Set[String] = readCheckpointRefs(fs, target, base) match {
-      case Some(refs) => refs.map(_._1).toSet
-      case None => readManifestFile(fs,
-          new org.apache.hadoop.fs.Path(mdir, f"gen-$base%012d"))
-        .filterNot(_.startsWith("# ")).map(l => dirOf(entryPath(l))).toSet
+    val ckpt = readLines(fs, checkpointPath(target, base))
+    val fromCkpt: Set[String] = ManifestLine.dirRefs(ckpt) match {
+      case Some(refs) => refs.map(_.dir).toSet
+      case None => ckpt.collect { case Bare(e) => e.dir }.toSet
     }
     ((base + 1) to gen).foldLeft(fromCkpt) { (acc, g) =>
-      acc ++ readManifestFile(fs,
-          new org.apache.hadoop.fs.Path(mdir, f"inc-$g%012d"))
-        .collect { case l if l.startsWith("+ ") => dirOf(entryPath(l.substring(2))) }
+      acc ++ readLines(fs, new org.apache.hadoop.fs.Path(mdir, f"inc-$g%012d"))
+        .collect { case Add(e) => e.dir }
     }
   }
 
@@ -2262,15 +2052,11 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String
   ): Option[Map[String, Long]] =
-    manifestGenerations(fs, target).lastOption.flatMap { g =>
-      val lines = manifestEntryLines(fs, target, g)
-      if (lines.exists(_.indexOf('\t') < 0)) None // legacy entries: no stats
-      else Some(lines
-        // live = physical footer count minus the entry's delete-vector
-        // positions (merge-on-read deletes keep counts metadata-exact)
-        .map(l => dirOf(entryPath(l)) ->
-          (l.split('\t')(1).toLong - entryDv(l).map(_._2).getOrElse(0L)))
-        .groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).sum })
+    latestEntries(fs, target).flatMap { case (_, entries) =>
+      // live = physical footer count minus the entry's delete-vector
+      // positions (merge-on-read deletes keep counts metadata-exact)
+      if (entries.exists(_.liveRows.isEmpty)) None // legacy entries: no stats
+      else Some(entries.groupMapReduce(_.dir)(_.liveRows.get)(_ + _))
     }
 
   /** METADATA-ONLY row count of the latest committed generation: the
@@ -2304,32 +2090,25 @@ object Streaming {
       // a ZERO-ROW entry (an emptied shard's schema-bearing file) has
       // no bounds and is VACUOUS for MIN/MAX — only a row-carrying
       // entry without bounds is ambiguous and forces the refusal
-      val lines = manifestEntryLines(fs, target, g).filterNot { l =>
-        val parts = l.split('\t')
-        parts.length >= 2 && parts(1) == "0"
-      }
-      if (lines.isEmpty) None
+      val entries = generationEntries(fs, target, g).filterNot(_.rows.contains(0L))
+      if (entries.isEmpty) None
       // a delete-vector entry's bounds cover DELETED rows too — the
       // recorded extreme may be a deleted row, so MIN/MAX must refuse
       // (COUNT stays exact via the per-entry dv counts)
-      else if (lines.exists(l => entryDv(l).isDefined)) None
+      else if (entries.exists(_.dv.isDefined)) None
       else {
         // a file whose column is ALL NULL (recorded `z` marker with
         // nc == rows) is VACUOUS for MIN/MAX — the r16 refusal
         // ("ambiguous between all-null and unrecordable") is resolved
         // by the recorded null counts; only a file with neither bounds
         // nor a full-null proof still refuses
-        val contributing = lines.filterNot { l =>
-          entryBounds(l).get(column).isEmpty && {
-            val rows = l.split('\t').lift(1).flatMap(s =>
-              scala.util.Try(s.toLong).toOption)
-            val nc = entryNullCounts(l).get(column)
-            rows.isDefined && nc.isDefined && nc == rows
-          }
+        val contributing = entries.filterNot { e =>
+          val nc = e.nullCounts.get(column)
+          !e.bounds.contains(column) && e.rows.isDefined && nc.isDefined && nc == e.rows
         }
         if (contributing.isEmpty) None // every row of the column is null
         else {
-        val perFile = contributing.map(l => entryBounds(l).get(column))
+        val perFile = contributing.map(_.bounds.get(column))
         if (perFile.exists(_.isEmpty)) None // any unbounded file: refuse
         else {
           val bs = perFile.flatten
@@ -2363,14 +2142,11 @@ object Streaming {
       column: String
   ): Option[Long] =
     manifestGenerations(fs, target).lastOption.flatMap { g =>
-      val lines = manifestEntryLines(fs, target, g).filterNot { l =>
-        val parts = l.split('\t')
-        parts.length >= 2 && parts(1) == "0"
-      }
-      if (lines.exists(l => entryDv(l).isDefined)) None
+      val entries = generationEntries(fs, target, g).filterNot(_.rows.contains(0L))
+      if (entries.exists(_.dv.isDefined)) None
       else {
-        val per = lines.map(l => entryNullCounts(l).get(column))
-        if (lines.nonEmpty && per.exists(_.isEmpty)) None
+        val per = entries.map(_.nullCounts.get(column))
+        if (per.exists(_.isEmpty)) None
         else Some(per.flatten.sum)
       }
     }
@@ -2381,11 +2157,8 @@ object Streaming {
   def latestManifest(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String
-  ): Option[(Long, Seq[String])] = {
-    val gens = manifestGenerations(fs, target)
-    if (gens.isEmpty) None
-    else Some((gens.max, manifestEntries(fs, target, gens.max)))
-  }
+  ): Option[(Long, Seq[String])] =
+    latestEntries(fs, target).map { case (g, entries) => (g, entries.map(_.path)) }
 
   /** TIME-TRAVEL read: `target` pinned to a SPECIFIC retained
     * generation. Because files are immutable under the commit
@@ -2420,11 +2193,9 @@ object Streaming {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireRetained(fs, target, gen)
-    val lines = manifestEntryLines(fs, target, gen)
-    require(lines.nonEmpty, s"generation $gen of $target has no entries")
-    applyDeleteVectors(spark, target, lines,
-      spark.read.option("basePath", target)
-        .parquet(lines.map(l => s"$target/${entryPath(l)}"): _*))
+    val entries = generationEntries(fs, target, gen)
+    require(entries.nonEmpty, s"generation $gen of $target has no entries")
+    readEntries(spark, target, entries)
   }
 
   /** INCREMENTAL consumption: the rows carried by files ADDED between
@@ -2462,23 +2233,30 @@ object Streaming {
     // tombstones, and files only in `toGen` are retained with it; a
     // pruned fromGen MANIFEST (unreadable chain) still refuses loudly
     val before = manifestEntries(fs, target, fromGen).toSet
-    val toLines = manifestEntryLines(fs, target, toGen)
-    val addedLines = toLines.filterNot(l => before(entryPath(l)))
-    if (addedLines.isEmpty) None
-    else Some(
-      // DV-applied at the TO generation: a file added in the window
-      // and then delete-vector-tagged still physically carries the
-      // masked rows — delivering them raw would resurrect retracted
-      // rows in every derived table (found in the r17 self-review;
-      // followTable's window guard covers only its own path)
-      applyDeleteVectors(spark, target, addedLines,
-        spark.read.option("basePath", target)
-          .option("mergeSchema", mergeSchema.toString)
-          .parquet(addedLines.map(l => s"$target/${entryPath(l)}"): _*)))
+    val added = generationEntries(fs, target, toGen).filterNot(e => before(e.path))
+    // DV-applied at the TO generation: a file added in the window and
+    // then delete-vector-tagged still physically carries the masked
+    // rows — delivering them raw would resurrect retracted rows in
+    // every derived table (found in the r17 self-review; followTable's
+    // window guard covers only its own path)
+    if (added.isEmpty) None else Some(readEntries(spark, target, added, mergeSchema))
   }
 
+  /** The DV-applied scan of exactly `entries`' files — the one read
+    * every manifest-resolved reader goes through.
+    */
+  private def readEntries(
+      spark: org.apache.spark.sql.SparkSession,
+      target: String,
+      entries: Seq[ManifestEntry],
+      mergeSchema: Boolean = false
+  ): DataFrame =
+    applyDeleteVectors(spark, target, entries,
+      spark.read.option("basePath", target).option("mergeSchema", mergeSchema.toString)
+        .parquet(entries.map(e => s"$target/${e.path}"): _*))
+
   /** MERGE-ON-READ: anti-join the delete vectors referenced by
-    * `lines` out of `df`, which must be a DIRECT file-scan frame over
+    * `entries` out of `df`, which must be a DIRECT file-scan frame over
     * exactly those entries' files (`_metadata` resolves against the
     * scan). No referenced DVs = `df` unchanged (the zero-cost common
     * case). The sidecars' (rel, pos) rows key on
@@ -2489,10 +2267,10 @@ object Streaming {
   private[graft] def applyDeleteVectors(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
-      lines: Seq[String],
+      entries: Seq[ManifestEntry],
       df: DataFrame
   ): DataFrame = {
-    val refs = lines.flatMap(entryDv).map(_._1).distinct
+    val refs = entries.flatMap(_.dv).map(_._1).distinct
     if (refs.isEmpty) df
     else {
       val targetPath = new org.apache.hadoop.fs.Path(target)
@@ -2502,7 +2280,7 @@ object Streaming {
         .parquet(refs.map(r => new org.apache.hadoop.fs.Path(mdir, r).toString): _*)
         .select(col("rel").as("__gdv_rel"), col("pos").as("__gdv_pos"))
         .distinct()
-      val totalDeleted = lines.flatMap(entryDv).map(_._2).sum
+      val totalDeleted = entries.flatMap(_.dv).map(_._2).sum
       val dvSide = if (totalDeleted <= 4000000L) broadcast(dv) else dv
       val qualRoot = fs.makeQualified(targetPath).toString
       df.withColumn("__gdv_rel",
@@ -2538,9 +2316,9 @@ object Streaming {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def reader = spark.read.option("mergeSchema", mergeSchema.toString)
-    latestManifestLines(fs, target) match {
+    latestEntries(fs, target) match {
       case None => reader.parquet(target)
-      case Some((gen, lines)) if lines.isEmpty =>
+      case Some((gen, entries)) if entries.isEmpty =>
         // an EMPTY committed generation means the table has NO live
         // rows — but under the immutable protocol the live directory
         // legitimately retains tombstoned files awaiting GC, so the
@@ -2557,8 +2335,8 @@ object Streaming {
                 "file remains to supply a schema — supply one explicitly or re-seed " +
                 "the table", e)
         }
-      case Some((gen, lines)) =>
-        val rels = lines.map(entryPath)
+      case Some((gen, entries)) =>
+        val rels = entries.map(_.path)
         rels.groupBy(dirOf).toSeq.sortBy(_._1).foreach { case (_, files) =>
           val probe = files.head
           if (!fs.exists(new org.apache.hadoop.fs.Path(s"$target/$probe")))
@@ -2567,22 +2345,18 @@ object Streaming {
                 s"the retention horizon ($ManifestKeep generations) was exceeded: more than " +
                 s"$ManifestKeep maintenance verbs completed since this generation was committed")
         }
-        applyDeleteVectors(spark, target, lines,
-          reader.option("basePath", target).parquet(rels.map(f => s"$target/$f"): _*))
+        readEntries(spark, target, entries, mergeSchema)
     }
   }
 
-  /** [[latestManifest]] with full ENTRY LINES (stats + dv tags) —
-    * what the DV-aware readers resolve from.
+  /** [[latestManifest]] with full ENTRIES (stats + dv tags) — what the
+    * DV-aware readers resolve from.
     */
-  private def latestManifestLines(
+  private def latestEntries(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String
-  ): Option[(Long, Seq[String])] = {
-    val gens = manifestGenerations(fs, target)
-    if (gens.isEmpty) None
-    else Some((gens.max, manifestEntryLines(fs, target, gens.max)))
-  }
+  ): Option[(Long, Seq[ManifestEntry])] =
+    manifestGenerations(fs, target).lastOption.map(g => (g, generationEntries(fs, target, g)))
 
   /** Pinned read RESTRICTED to the given partition directories —
     * O(touched) file resolution, never a table-wide listing (the
@@ -2603,11 +2377,8 @@ object Streaming {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     manifestGenerations(fs, target).lastOption match {
       case Some(g) =>
-        val lines = entriesForDirs(fs, target, g, Some(dirs))
-        if (lines.isEmpty) None
-        else Some(applyDeleteVectors(spark, target, lines,
-          spark.read.option("basePath", target)
-            .parquet(lines.map(l => s"$target/${entryPath(l)}"): _*)))
+        val entries = entriesForDirs(fs, target, g, Some(dirs))
+        if (entries.isEmpty) None else Some(readEntries(spark, target, entries))
       case None =>
         val live = dirs.toSeq.sorted
           .map(d => new org.apache.hadoop.fs.Path(s"$target/$d"))
@@ -2654,42 +2425,18 @@ object Streaming {
       target: String,
       predicates: Seq[(String, Any, Any)]
   ): Option[(Seq[String], Int)] =
-    zoneMapLinesMulti(fs, target, predicates).map { case (kept, total) =>
-      (kept.map(entryPath), total)
+    latestEntries(fs, target).map { case (_, entries) =>
+      (zoneMapKeep(entries, closed(predicates), strict = true).map(_.path), entries.size)
     }
 
-  /** [[zoneMapFilesMulti]] at the LINE level (stats + dv tags kept) —
-    * what the DV-aware pruned readers resolve from.
-    */
-  private def zoneMapLinesMulti(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      predicates: Seq[(String, Any, Any)]
-  ): Option[(Seq[String], Int)] =
-    manifestGenerations(fs, target).lastOption.map { g =>
-      val lines = manifestEntryLines(fs, target, g)
-      val kept = lines.filter { l =>
-        val bounds = entryBounds(l)
-        predicates.forall { case (column, lo, hi) =>
-          bounds.get(column) match {
-            case None => true // unboundable: must keep
-            case Some((k, mn, mx)) => boundsOverlap(k, mn, mx, lo, hi)
-          }
-        }
-      }
-      (kept, lines.size)
-    }
+  private def closed(predicates: Seq[(String, Any, Any)]) =
+    predicates.map { case (c, lo, hi) => (c, Some(lo), Some(hi)) }
 
-  /** Generation-PINNED zone-map pruning with OPEN-ended ranges — the
-    * DataSource connector's pushdown entry point
-    * ([[graft.sources.GraftFileIndex]]). `predicates` are conjunctive
-    * `(column, lo, hi)` with None = that side unbounded; losslessness
-    * exactly as [[zoneMapFilesMulti]] (an unboundable column, a
-    * stat-less entry, or a bound/kind type mismatch keeps the file —
-    * pruning is an optimization, never a correctness dependency).
-    * Empty predicates return the generation's full live file list, so
-    * this is also the connector's snapshot-resolution call. Returns
-    * (kept relative paths, total entries).
+  /** Generation-PINNED zone-map pruning with OPEN-ended ranges.
+    * `predicates` are conjunctive `(column, lo, hi)` with None = that
+    * side unbounded; losslessness exactly as [[zoneMapFilesMulti]].
+    * Empty predicates return the generation's full live file list.
+    * Returns (kept relative paths, total entries).
     */
   def zoneMapFilesAt(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -2697,43 +2444,69 @@ object Streaming {
       gen: Long,
       predicates: Seq[(String, Option[Any], Option[Any])]
   ): (Seq[String], Int) = {
-    val lines = manifestEntryLines(fs, target, gen)
-    val kept = lines.filter { l =>
-      lazy val bounds = entryBounds(l)
-      predicates.isEmpty || predicates.forall { case (column, lo, hi) =>
+    val entries = generationEntries(fs, target, gen)
+    (zoneMapKeep(entries, predicates).map(_.path), entries.size)
+  }
+
+  /** ZONE-MAP pruning over entries a reader already holds: the entries
+    * whose recorded bounds can overlap EVERY `(column, lo, hi)` range
+    * (None = that side unbounded). An entry with no bounds for a column
+    * (legacy entry, stats-less footer, incomplete chunk statistics, a
+    * non-prunable type) is always kept — pruning only ever drops a file
+    * the footer PROVED can hold no matching row. A bound whose type
+    * does not match the column's recorded kind keeps the file, or with
+    * `strict` throws (a fractional bound on an integral column).
+    */
+  private[graft] def zoneMapKeep(
+      entries: Seq[ManifestEntry],
+      predicates: Seq[(String, Option[Any], Option[Any])],
+      strict: Boolean = false
+  ): Seq[ManifestEntry] =
+    if (predicates.isEmpty) entries
+    else entries.filter { e =>
+      val bounds = e.bounds
+      predicates.forall { case (column, lo, hi) =>
         bounds.get(column) match {
           case None => true // unboundable: must keep
           case Some((k, mn, mx)) =>
-            try boundsOverlapOpt(k, mn, mx, lo, hi)
-            catch { case _: IllegalArgumentException => true } // type drift: keep
+            try boundsOverlap(k, mn, mx, lo, hi)
+            catch { case _: IllegalArgumentException if !strict => true } // type drift: keep
         }
       }
-    }.map(entryPath)
-    (kept, lines.size)
-  }
+    }
 
-  private def boundsOverlapOpt(
+  /** Can a file whose `kind` column spans [mn, mx] hold a value in
+    * [lo, hi]? Both query bounds are converted before either is
+    * compared, so a bound of the wrong type always throws.
+    */
+  private def boundsOverlap(
       kind: Char, mn: String, mx: String, lo: Option[Any], hi: Option[Any]): Boolean =
     kind match {
       case 'l' =>
-        lo.forall(v => mx.toLong >= asLong(v)) && hi.forall(v => mn.toLong <= asLong(v))
+        val (a, b) = (lo.map(asLong), hi.map(asLong))
+        a.forall(mx.toLong >= _) && b.forall(mn.toLong <= _)
       case 'd' =>
-        lo.forall(v => mx.toDouble >= asDouble(v)) && hi.forall(v => mn.toDouble <= asDouble(v))
+        val (a, b) = (lo.map(asDouble), hi.map(asDouble))
+        a.forall(mx.toDouble >= _) && b.forall(mn.toDouble <= _)
       case _ =>
         lo.forall(v => !utf8Lt(mx, v.toString)) && hi.forall(v => !utf8Lt(v.toString, mn))
     }
 
-  private def boundsOverlap(kind: Char, mn: String, mx: String, lo: Any, hi: Any): Boolean =
-    kind match {
-      case 'l' =>
-        val (qlo, qhi) = (asLong(lo), asLong(hi))
-        !(mx.toLong < qlo || mn.toLong > qhi)
-      case 'd' =>
-        val (qlo, qhi) = (asDouble(lo), asDouble(hi))
-        !(mx.toDouble < qlo || mn.toDouble > qhi)
-      case _ =>
-        val (qlo, qhi) = (lo.toString, hi.toString)
-        !(utf8Lt(mx, qlo) || utf8Lt(qhi, mn))
+  /** Files that can hold rows satisfying `column IS [NOT] NULL`, from
+    * the per-file null counts recorded in the zone maps — lossless: a
+    * file without the statistic is always kept, and the counts stay
+    * sound under delete vectors (deletion never adds a null or a
+    * non-null, so "zero nulls" and "all null" both survive masking).
+    */
+  private[graft] def nullKeep(
+      entries: Seq[ManifestEntry],
+      column: String,
+      isNull: Boolean
+  ): Seq[ManifestEntry] =
+    entries.filter { e =>
+      val nc = e.nullCounts.get(column)
+      if (isNull) nc.forall(_ > 0L)
+      else e.bounds.contains(column) || nc.isEmpty || e.rows.isEmpty || nc.get < e.rows.get
     }
 
   /** UNSIGNED UTF-8 byte-wise string order — the order parquet's
@@ -2804,14 +2577,9 @@ object Streaming {
     val residual = predicates.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
     }.reduce(_ && _)
-    zoneMapLinesMulti(fs, target, predicates) match {
-      case Some((kept, _)) if kept.isEmpty =>
-        readCommitted(spark, target).where(lit(false))
-      case Some((kept, _)) =>
-        applyDeleteVectors(spark, target, kept,
-          spark.read.option("basePath", target)
-            .parquet(kept.map(l => s"$target/${entryPath(l)}"): _*))
-          .where(residual)
+    latestEntries(fs, target).map(e => zoneMapKeep(e._2, closed(predicates), strict = true)) match {
+      case Some(kept) if kept.isEmpty => readCommitted(spark, target).where(lit(false))
+      case Some(kept) => readEntries(spark, target, kept).where(residual)
       case None => readCommitted(spark, target).where(residual)
     }
   }
@@ -2875,12 +2643,10 @@ object Streaming {
       target: String,
       column: String
   ): Option[Double] =
-    manifestGenerations(fs, target).lastOption.flatMap { g =>
-      depthOfLines(manifestEntryLines(fs, target, g), column)
-    }
+    latestEntries(fs, target).flatMap(e => depthOf(e._2, column))
 
-  private def depthOfLines(lines: Seq[String], column: String): Option[Double] = {
-      val per = lines.map(l => entryBounds(l).get(column))
+  private def depthOf(entries: Seq[ManifestEntry], column: String): Option[Double] = {
+      val per = entries.map(_.bounds.get(column))
       if (per.isEmpty || per.exists(_.isEmpty)) None
       else {
         val bs = per.flatten
@@ -2915,10 +2681,9 @@ object Streaming {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one manifest reconstruction supplies both health signals
-    val lines = manifestGenerations(fs, target).lastOption
-      .map(g => manifestEntryLines(fs, target, g)).getOrElse(Seq.empty)
-    val degraded = lines.size > 2 * numFiles ||
-      depthOfLines(lines, column).exists(_ > maxDepth)
+    val entries = latestEntries(fs, target).map(_._2).getOrElse(Seq.empty)
+    val degraded = entries.size > 2 * numFiles ||
+      depthOf(entries, column).exists(_ > maxDepth)
     if (degraded) clusterTable(spark, target, column, numFiles)
     degraded
   }
@@ -2961,11 +2726,9 @@ object Streaming {
       // ABSORBED (the rewrite reads DV-applied rows and the new entries
       // carry no tags), reclaiming both the masked rows' bytes and the
       // read-side anti-join.
-      val lines = manifestEntryLines(fs, target, gen)
-      val perDir = lines.map(entryPath)
-        .groupBy(dirOf).map { case (d, fsList) => d -> fsList.size }
-      val dvDirs = lines.filter(l => entryDv(l).isDefined)
-        .map(l => dirOf(entryPath(l)))
+      val entries = generationEntries(fs, target, gen)
+      val perDir = entries.groupBy(_.dir).map { case (d, es) => d -> es.size }
+      val dvDirs = entries.filter(_.dv.isDefined).map(_.dir)
         .filter(_.startsWith(s"$shardCol=")).toSet
       val fragmented = perDir.collect {
         case (d, n) if n > maxFilesPerShard && d.startsWith(s"$shardCol=") => d
@@ -2988,31 +2751,6 @@ object Streaming {
   // ====================================================================
   // BLOOM-FILTER FILE SKIPPING (r16 judge #5)
   // ====================================================================
-
-  /** Parse an entry line's bloom tags: `bl:<encCol>:<sidecar>` fields
-    * (one per indexed column). The sidecar is a manifest-dir parquet
-    * of (rel, m, k, bits) rows; `bits` is the file's bloom bitset over
-    * the column's canonical key bytes.
-    */
-  private[graft] def entryBlooms(line: String): Map[String, String] =
-    line.split('\t').iterator.flatMap { f =>
-      // same structural test as [[entryDv]] (r17 advice, low): a real
-      // bloom tag is exactly `bl:<col>:<sidecar>` — 3 colon parts, no
-      // commas — so a bounds field led by a column named "bl" (4-5
-      // colon parts per token, comma-joined) never misparses
-      if (!f.startsWith("bl:")) None
-      else f.split(':') match {
-        case Array(_, c, sidecar) if !sidecar.contains(',') =>
-          Some(java.net.URLDecoder.decode(c, "UTF-8") -> sidecar)
-        case _ => None
-      }
-    }.toMap
-
-  private def withBloomTag(line: String, column: String, sidecar: String): String = {
-    val enc = java.net.URLEncoder.encode(column, "UTF-8")
-    (line.split('\t').filterNot(_.startsWith(s"bl:$enc:")) :+ s"bl:$enc:$sidecar")
-      .mkString("\t")
-  }
 
   /** Canonical key bytes for bloom hashing: integral values as their
     * decimal string, strings as UTF-8 — one representation on both the
@@ -3069,13 +2807,13 @@ object Streaming {
       val gen = manifestGenerations(fs, target).lastOption.getOrElse(
         throw new IllegalStateException(
           s"cannot bloom-index $target: no committed manifest"))
-      val lines = manifestEntryLines(fs, target, gen)
-      if (lines.isEmpty) return 0
-      val lineByPath = lines.map(l => entryPath(l) -> l).toMap
+      val entries = generationEntries(fs, target, gen)
+      if (entries.isEmpty) return 0
+      val byPath = entries.map(e => e.path -> e).toMap
       val qualRoot = fs.makeQualified(targetPath).toString
       import spark.implicits._
       val keyed = spark.read.option("basePath", target)
-        .parquet(lines.map(l => s"$target/${entryPath(l)}"): _*)
+        .parquet(entries.map(e => s"$target/${e.path}"): _*)
         .select(
           expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})").as("rel"),
           col(column).cast("string").as("k"))
@@ -3114,10 +2852,10 @@ object Streaming {
       require(fs.rename(part, new org.apache.hadoop.fs.Path(mdir, sidecarName)),
         s"bloom sidecar rename failed for $target")
       fs.delete(tmpDir, true)
-      val newLines: Map[String, String] = built.iterator.map { case (rel, _, _, _) =>
-        rel -> withBloomTag(lineByPath(rel), column, sidecarName)
+      val tagged: Map[String, ManifestEntry] = built.iterator.map { case (rel, _, _, _) =>
+        rel -> byPath(rel).withBloom(column, sidecarName)
       }.toMap
-      val touchedDirs = newLines.keySet.map(dirOf)
+      val touchedDirs = tagged.keySet.map(dirOf)
       // lease-serialized, but the CAS loop keeps optimistic racers safe:
       // a lost CAS re-resolves; a racer that REWROTE one of our files
       // just drops that file's retag (its new entry is untagged anyway)
@@ -3125,21 +2863,28 @@ object Streaming {
       while (!done) {
         val latest = manifestGenerations(fs, target).lastOption.getOrElse(0L)
         val current = entriesForDirs(fs, target, latest, Some(touchedDirs))
-          .map(l => entryPath(l) -> l).toMap
-        val applicable = newLines.filter { case (p, _) =>
-          current.get(p).contains(lineByPath(p))
-        }
+        val unchanged = current.toSet
+        val applicable = tagged.filter { case (p, _) => unchanged(byPath(p)) }
         if (applicable.isEmpty) return 0
-        val post: Map[String, Seq[String]] = touchedDirs.iterator.map { d =>
-          d -> entriesForDirs(fs, target, latest, Some(Set(d)))
-            .map(l => applicable.getOrElse(entryPath(l), l)).sorted
-        }.toMap
-        done = tryCommitManifest(fs, target, latest + 1, post, Nil, Nil,
-          modified = applicable.values.toSeq.sorted)
+        done = tryCommitManifest(fs, target, latest + 1,
+          retagged(touchedDirs, current, applicable), Nil, Nil,
+          modified = applicable.values.toSeq.sortBy(_.path))
       }
       refreshListing(target)
-      newLines.size
+      tagged.size
     }
+  }
+
+  /** Post-commit entries of each of `dirs` for an in-place retag commit. */
+  private def retagged(
+      dirs: Set[String],
+      current: Seq[ManifestEntry],
+      retags: Map[String, ManifestEntry]
+  ): Map[String, Seq[ManifestEntry]] = {
+    val byDir = current.groupBy(_.dir)
+    dirs.iterator.map { d =>
+      d -> byDir.getOrElse(d, Nil).map(e => retags.getOrElse(e.path, e)).sortBy(_.path)
+    }.toMap
   }
 
   /** Bloom-index HEALTH of `column` at the latest generation: the
@@ -3152,13 +2897,10 @@ object Streaming {
       target: String,
       column: String
   ): Option[Double] =
-    manifestGenerations(fs, target).lastOption.map { g =>
-      val lines = manifestEntryLines(fs, target, g).filterNot { l =>
-        val parts = l.split('\t')
-        parts.length >= 2 && parts(1) == "0"
-      }
-      if (lines.isEmpty) 1.0
-      else lines.count(l => entryBlooms(l).contains(column)).toDouble / lines.size
+    latestEntries(fs, target).map { case (_, all) =>
+      val entries = all.filterNot(_.rows.contains(0L))
+      if (entries.isEmpty) 1.0
+      else entries.count(_.blooms.contains(column)).toDouble / entries.size
     }
 
   /** The bloom half of the OPTIMIZE autopilot (the
@@ -3181,39 +2923,36 @@ object Streaming {
     }
   }
 
-  /** The subset of `lines` whose bloom filters (when present for
+  /** The subset of `entries` whose bloom filters (when present for
     * `column`) might contain ANY of `values` — untagged entries are
     * always kept (lossless). Driver-side probe: the sidecar rows for
     * the candidate files are loaded and tested locally (O(candidate
     * files) bitset reads, the same metadata cost class as the zone
     * maps).
     */
-  private def bloomKeptLines(
+  private[graft] def bloomKeep(
       spark: org.apache.spark.sql.SparkSession,
       target: String,
-      lines: Seq[String],
+      entries: Seq[ManifestEntry],
       column: String,
       values: Seq[Any]
-  ): Seq[String] = {
-    val tagged = lines.flatMap(l => entryBlooms(l).get(column).map(entryPath(l) -> _)).toMap
-    if (tagged.isEmpty || values.isEmpty) lines
+  ): Seq[ManifestEntry] = {
+    val tagged = entries.flatMap(e => e.blooms.get(column).map(e.path -> _)).toMap
+    if (tagged.isEmpty || values.isEmpty) entries
     else {
       val mdir = manifestDir(target)
-      val sidecars = tagged.values.toSeq.distinct
       import org.apache.spark.sql.Row
-      val taggedRels = tagged.keySet
       val byRel: Map[String, (Int, Int, Array[Byte])] = spark.read
-        .parquet(sidecars.map(s => new org.apache.hadoop.fs.Path(mdir, s).toString): _*)
+        .parquet(tagged.values.toSeq.distinct
+          .map(s => new org.apache.hadoop.fs.Path(mdir, s).toString): _*)
         .collect().iterator.collect {
-          case Row(rel: String, m: Int, k: Int, bits: Array[Byte]) if taggedRels(rel) =>
+          case Row(rel: String, m: Int, k: Int, bits: Array[Byte]) if tagged.contains(rel) =>
             rel -> ((m, k, bits))
         }.toMap
-      lines.filter { l =>
-        val p = entryPath(l)
-        tagged.get(p).flatMap(_ => byRel.get(p)) match {
+      entries.filter { e =>
+        byRel.get(e.path) match {
           case None => true // untagged or sidecar row missing: keep
-          case Some((m, k, bits)) =>
-            values.exists(v => bloomMightContain(bits, m, k, v))
+          case Some((m, k, bits)) => values.exists(v => bloomMightContain(bits, m, k, v))
         }
       }
     }
@@ -3232,27 +2971,11 @@ object Streaming {
       target: String,
       column: String,
       value: Any
-  ): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    zoneMapLinesMulti(fs, target, Nil) match {
-      case None => readCommitted(spark, target).where(col(column) === lit(value))
-      case Some((all, _)) =>
-        val zoneKept = all.filter { l =>
-          entryBounds(l).get(column) match {
-            case None => true
-            case Some((k, mn, mx)) =>
-              try boundsOverlapOpt(k, mn, mx, Some(value), Some(value))
-              catch { case _: IllegalArgumentException => true }
-          }
-        }
-        val kept = bloomKeptLines(spark, target, zoneKept, column, Seq(value))
-        if (kept.isEmpty) readCommitted(spark, target).where(lit(false))
-        else applyDeleteVectors(spark, target, kept,
-          spark.read.option("basePath", target)
-            .parquet(kept.map(l => s"$target/${entryPath(l)}"): _*))
-          .where(col(column) === lit(value))
-    }
+  ): DataFrame = pointPrune(spark, target, column, value) match {
+    case None => readCommitted(spark, target).where(col(column) === lit(value))
+    case Some((kept, _, _)) if kept.isEmpty => readCommitted(spark, target).where(lit(false))
+    case Some((kept, _, _)) =>
+      readEntries(spark, target, kept).where(col(column) === lit(value))
   }
 
   /** (kept-after-bloom, kept-after-zonemap, total) for a point probe —
@@ -3263,50 +2986,30 @@ object Streaming {
       target: String,
       column: String,
       value: Any
-  ): (Int, Int, Int) = {
+  ): (Int, Int, Int) =
+    pointPrune(spark, target, column, value)
+      .fold((0, 0, 0)) { case (kept, zoneKept, total) => (kept.size, zoneKept, total) }
+
+  /** The latest generation's entries kept by the zone maps and then
+    * the blooms of `column` for `column = value`, with the zone-kept
+    * and total counts. None when the table has no manifest.
+    */
+  private def pointPrune(
+      spark: org.apache.spark.sql.SparkSession,
+      target: String,
+      column: String,
+      value: Any
+  ): Option[(Seq[ManifestEntry], Int, Int)] = {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    zoneMapLinesMulti(fs, target, Nil) match {
-      case None => (0, 0, 0)
-      case Some((all, total)) =>
-        val zoneKept = all.filter { l =>
-          entryBounds(l).get(column) match {
-            case None => true
-            case Some((k, mn, mx)) =>
-              try boundsOverlapOpt(k, mn, mx, Some(value), Some(value))
-              catch { case _: IllegalArgumentException => true }
-          }
-        }
-        val kept = bloomKeptLines(spark, target, zoneKept, column, Seq(value))
-        (kept.size, zoneKept.size, total)
+    latestEntries(fs, target).map { case (_, all) =>
+      val zoneKept = zoneMapKeep(all, Seq((column, Some(value), Some(value))))
+      (bloomKeep(spark, target, zoneKept, column, Seq(value)), zoneKept.size, all.size)
     }
   }
 
-  /** Connector hook: prune `candidates` (relative paths at `gen`) by
-    * the bloom filters of `column` for a point/IN probe. Lossless —
-    * untagged files are kept.
-    */
-  def bloomPruneFiles(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: String,
-      gen: Long,
-      column: String,
-      values: Seq[Any],
-      candidates: Seq[String]
-  ): Seq[String] = {
-    val cand = candidates.toSet
-    val lines = manifestEntryLines(fs, target, gen).filter(l => cand(entryPath(l)))
-    bloomKeptLines(spark, target, lines, column, values).map(entryPath)
-  }
-
-  /** Files that can hold rows satisfying `column IS [NOT] NULL`, from
-    * the per-file null counts recorded in the zone maps — lossless: a
-    * file without the statistic is always kept, and the counts stay
-    * sound under delete vectors (deletion never adds a null or a
-    * non-null, so "zero nulls" and "all null" both survive masking).
-    * The connector's null-test pushdown hook; `candidates` restricts
-    * to already-pruned paths.
+  /** Connector-shaped null-test pruning of `candidates` (relative
+    * paths at `gen`) — see [[nullKeep]].
     */
   def nullPruneFiles(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -3317,18 +3020,8 @@ object Streaming {
       candidates: Seq[String]
   ): Seq[String] = {
     val cand = candidates.toSet
-    manifestEntryLines(fs, target, gen)
-      .filter(l => cand(entryPath(l)))
-      .filter { l =>
-        val nc = entryNullCounts(l).get(column)
-        val rows = l.split('\t').lift(1).flatMap(s => scala.util.Try(s.toLong).toOption)
-        if (isNull) nc.forall(_ > 0L)
-        else {
-          val hasValues = entryBounds(l).contains(column)
-          hasValues || nc.isEmpty || rows.isEmpty || nc.get < rows.get
-        }
-      }
-      .map(entryPath)
+    nullKeep(generationEntries(fs, target, gen).filter(e => cand(e.path)), column, isNull)
+      .map(_.path)
   }
 
   /** GC delete-vector sidecars that no RETAINED generation's entries
@@ -3352,7 +3045,7 @@ object Streaming {
     }.map(_.getPath.getName)
     if (dvFiles.isEmpty) return
     val referenced: Set[String] = manifestGenerations(fs, target).flatMap { g =>
-      try manifestEntryLines(fs, target, g).flatMap(l => entryDv(l).map(_._1))
+      try generationEntries(fs, target, g).flatMap(_.dv.map(_._1))
       catch { case _: IllegalStateException => dvFiles.toSeq } // pruned mid-walk: keep all
     }.toSet
     dvFiles.filterNot(referenced).foreach(n =>
@@ -3583,6 +3276,23 @@ object Streaming {
     col(column) >= lit(lo) && col(column) <= lit(hi),
     ranges = Seq((column, Some(lo), Some(hi))), maxAttempts)
 
+  /** `gen`'s entries for a position-based verb, which needs a row
+    * count on every entry: legacy stat-less entries refuse loudly.
+    */
+  private def statsEntries(
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: String,
+      gen: Long,
+      verb: String
+  ): Seq[ManifestEntry] = {
+    val entries = generationEntries(fs, target, gen)
+    require(entries.forall(_.rows.isDefined),
+      s"$verb needs per-file row counts on every entry of $target — " +
+        "legacy stat-less entries present; rewrite once (clusterTable / " +
+        "compactShards) to record footer stats first")
+    entries
+  }
+
   /** Write (rel, pos) `combined` as ONE DV sidecar parquet in the
     * manifest dir, named for the generation it will be committed at;
     * returns the sidecar file name. O(deleted rows) bytes.
@@ -3616,12 +3326,11 @@ object Streaming {
       spark: org.apache.spark.sql.SparkSession,
       target: String,
       hits: DataFrame,
-      lineByPath: Map[String, String],
+      byPath: Map[String, ManifestEntry],
       touchedRels: Set[String]
   ): DataFrame = {
     val mdir = manifestDir(target)
-    val priorRefs = touchedRels.toSeq
-      .flatMap(r => entryDv(lineByPath(r)).map(_._1)).distinct
+    val priorRefs = touchedRels.toSeq.flatMap(r => byPath(r).dv.map(_._1)).distinct
     val base =
       if (priorRefs.isEmpty) hits
       else hits.unionByName(
@@ -3649,26 +3358,17 @@ object Streaming {
         throw new IllegalStateException(
           s"cannot delete from $target: no committed manifest (not maintained " +
             "by this module)"))
-      val allLines = manifestEntryLines(fs, target, gen)
-      if (allLines.isEmpty) return 0L
-      require(allLines.forall(_.indexOf('\t') >= 0),
-        s"deleteWhere needs per-file row counts on every entry of $target — " +
-          "legacy stat-less entries present; rewrite once (clusterTable / " +
-          "compactShards) to record footer stats first")
+      val all = statsEntries(fs, target, gen, "deleteWhere")
+      if (all.isEmpty) return 0L
       // candidate files: zone-map pruned for range deletes, all otherwise
-      val scanLines =
-        if (ranges.isEmpty) allLines
-        else {
-          val keptPaths = zoneMapFilesAt(fs, target, gen, ranges)._1.toSet
-          allLines.filter(l => keptPaths(entryPath(l)))
-        }
-      if (scanLines.isEmpty) return 0L
-      val lineByPath = allLines.map(l => entryPath(l) -> l).toMap
+      val scan = zoneMapKeep(all, ranges)
+      if (scan.isEmpty) return 0L
+      val byPath = all.map(e => e.path -> e).toMap
       val qualRoot = fs.makeQualified(targetPath).toString
       // the position scan: matching rows' (rel, pos). Parquet pushdown
       // prunes row groups; only O(deleted rows) survive to the write.
       val hits = spark.read.option("basePath", target)
-        .parquet(scanLines.map(l => s"$target/${entryPath(l)}"): _*)
+        .parquet(scan.map(e => s"$target/${e.path}"): _*)
         .where(predicate)
         .select(
           expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})").as("rel"),
@@ -3679,18 +3379,17 @@ object Streaming {
       if (touchedRels.isEmpty) return 0L
       // merge prior positions of re-deleted files into the new sidecar
       // (each tag must reference its file's COMPLETE set)
-      val combined = withPriorDvPositions(spark, target, hits, lineByPath, touchedRels)
+      val combined = withPriorDvPositions(spark, target, hits, byPath, touchedRels)
       // one sidecar per commit, O(deleted rows) bytes
       val sidecarName = writeDvSidecar(fs, target, combined, gen + 1)
       // absolute per-file deleted counts after the merge
       val perFileTotal: Map[String, Long] = combined.groupBy("rel")
         .agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val before = touchedRels.toSeq
-        .map(r => entryDv(lineByPath(r)).map(_._2).getOrElse(0L)).sum
+      val before = touchedRels.toSeq.map(r => byPath(r).dv.fold(0L)(_._2)).sum
       val deletedNow = perFileTotal.values.sum - before
-      val newLines: Map[String, String] = touchedRels.iterator.map { r =>
-        r -> withDvTag(lineByPath(r), sidecarName, perFileTotal(r))
+      val retags: Map[String, ManifestEntry] = touchedRels.iterator.map { r =>
+        r -> byPath(r).withDv(sidecarName, perFileTotal(r))
       }.toMap
       val touchedDirs = touchedRels.map(dirOf)
       // staleness + CAS loop (the optimistic-commit shape): a racing
@@ -3700,21 +3399,14 @@ object Streaming {
       var state = 0 // 0 = trying, 1 = committed, 2 = conflicted
       while (state == 0) {
         val latest = manifestGenerations(fs, target).lastOption.getOrElse(0L)
-        val conflicted = latest > gen && {
-          val changed = ((gen + 1) to latest)
-            .foldLeft(Option(Set.empty[String])) { (acc, g) =>
-              for (a <- acc; d <- deltaDirsOf(fs, target, g)) yield a ++ d
-            }
-          changed.forall(ch => ch.intersect(touchedDirs).nonEmpty)
-        }
+        val conflicted = latest > gen && windowDelta(fs, target, gen, latest)
+          .forall(w => changedDirs(w).intersect(touchedDirs).nonEmpty)
         if (conflicted) state = 2
         else {
-          val post: Map[String, Seq[String]] = touchedDirs.iterator.map { d =>
-            d -> entriesForDirs(fs, target, latest, Some(Set(d)))
-              .map(l => newLines.getOrElse(entryPath(l), l)).sorted
-          }.toMap
+          val post = retagged(touchedDirs,
+            entriesForDirs(fs, target, latest, Some(touchedDirs)), retags)
           if (tryCommitManifest(fs, target, latest + 1, post, Nil, Nil,
-              modified = newLines.values.toSeq.sorted))
+              modified = retags.values.toSeq.sortBy(_.path)))
             state = 1
           // else: CAS lost — loop re-checks staleness at the new latest
         }
@@ -3776,12 +3468,8 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       gen: Long
-  ): Option[Long] = {
-    val mdir = manifestDir(target)
-    Seq(f"gen-$gen%012d", f"inc-$gen%012d")
-      .map(n => new org.apache.hadoop.fs.Path(mdir, n)).find(fs.exists)
-      .map(p => fs.getFileStatus(p).getModificationTime)
-  }
+  ): Option[Long] =
+    generationFile(fs, target, gen).map(p => fs.getFileStatus(p).getModificationTime)
 
   def tableHistory(
       spark: org.apache.spark.sql.SparkSession,
@@ -3789,24 +3477,20 @@ object Streaming {
   ): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mdir = manifestDir(target)
     val rows = manifestGenerations(fs, target).sorted.reverse.map { g =>
-      val kind =
-        if (fs.exists(new org.apache.hadoop.fs.Path(mdir, f"gen-$g%012d")))
-          "checkpoint" else "delta"
-      val lines = manifestEntryLines(fs, target, g)
+      val kind = if (fs.exists(checkpointPath(target, g))) "checkpoint" else "delta"
+      val entries = generationEntries(fs, target, g)
       val liveRows: Option[Long] =
-        if (lines.exists(_.indexOf('\t') < 0)) None
-        else Some(lines.map(l =>
-          l.split('\t')(1).toLong - entryDv(l).map(_._2).getOrElse(0L)).sum)
+        if (entries.exists(_.liveRows.isEmpty)) None
+        else Some(entries.flatMap(_.liveRows).sum)
       (g, kind,
         commitTimeMs(fs, target, g)
           .map(ms => new java.sql.Timestamp(ms)).orNull,
-        lines.size.toLong, liveRows,
+        entries.size.toLong, liveRows,
         commitSchemaHash(fs, target, g), commitTag(fs, target, g),
         commitTxns(fs, target, g).toSeq.sorted
           .map { case (s, i) => s"$s=$i" }.mkString(","),
-        lines.exists(l => entryDv(l).isDefined))
+        entries.exists(_.dv.isDefined))
     }
     import spark.implicits._
     rows.toDF("generation", "kind", "committed_at", "live_files", "live_rows",
@@ -3881,8 +3565,8 @@ object Streaming {
         throw new IllegalStateException(
           s"cannot merge into $target: no committed manifest (not maintained " +
             "by this module)"))
-      val allLines = manifestEntryLines(fs, target, gen)
-      if (allLines.isEmpty) {
+      val all = statsEntries(fs, target, gen, "mergeInto")
+      if (all.isEmpty) {
         // zero live rows: only the not-matched clause can fire, and
         // with no target schema to map onto, only INSERT-ALL is
         // well-defined
@@ -3899,10 +3583,6 @@ object Streaming {
               return MergeStats(0L, n)
         }
       } else {
-        require(allLines.forall(_.indexOf('\t') >= 0),
-          s"mergeInto needs per-file row counts on every entry of $target — " +
-            "legacy stat-less entries present; rewrite once (clusterTable / " +
-            "compactShards) to record footer stats first")
         // KEY-ENVELOPE FILE PRUNING (the Delta merge file-skipping
         // shape): when the ON condition is a CONJUNCTION of equalities
         // on the prune columns (same names both sides), the [min, max]
@@ -3926,8 +3606,8 @@ object Streaming {
               (c, 'd', asDouble(lo).toString, asDouble(hi).toString)
             case _ => (c, 's', lo.toString, hi.toString)
           }
-        val (scanLines, typedEnvelopes): (Seq[String], Seq[(String, Char, String, String)]) =
-          if (pruneCols.isEmpty) (allLines, Nil)
+        val (scan, typedEnvelopes): (Seq[ManifestEntry], Seq[(String, Char, String, String)]) =
+          if (pruneCols.isEmpty) (all, Nil)
           else {
             val withKeys = source.filter(
               pruneCols.map(c => col(c).isNotNull).reduce(_ && _))
@@ -3940,8 +3620,7 @@ object Streaming {
                 (c, Some(mm.get(2 * i)): Option[Any],
                   Some(mm.get(2 * i + 1)): Option[Any])
               }
-              val keptPaths = zoneMapFilesAt(fs, target, gen, ranges)._1.toSet
-              (allLines.filter(l => keptPaths(entryPath(l))),
+              (zoneMapKeep(all, ranges),
                 ranges.map { case (c, lo, hi) => envOf(c, lo.get, hi.get) })
             }
           }
@@ -3955,13 +3634,13 @@ object Streaming {
           if (whenNotMatchedInsert.isEmpty) Nil
           else if (typedEnvelopes.nonEmpty) typedEnvelopes
           else Seq(("*", '*', "", ""))
-        if (scanLines.isEmpty) {
+        if (scan.isEmpty) {
           // nothing can match: the whole source is unmatched
           whenNotMatchedInsert match {
             case None => return MergeStats(0L, 0L)
             case Some(m) =>
               val probe = spark.read.option("basePath", target)
-                .parquet(s"$target/${entryPath(allLines.head)}")
+                .parquet(s"$target/${all.head.path}")
               val sA = source.alias("s")
               val ins = sA.select(probe.columns.toSeq.map(c =>
                 expr(m.getOrElse(c, s"s.`$c`")).as(c)): _*).localCheckpoint()
@@ -3971,23 +3650,17 @@ object Streaming {
               // live file's bounds — same conflict scope as a scan
               if (commitMutation(spark, target, gen, Map.empty,
                   emptyPositions(spark), Some(ins), stagePartitionBy, n,
-                  extraVolatileDirs = allLines.map(l => dirOf(entryPath(l))).toSet,
+                  extraVolatileDirs = all.map(_.dir).toSet,
                   keyEnvelopes = insertEnvelopes)) {
                 refreshListing(target)
                 return MergeStats(0L, n)
               }
           }
         } else {
-        val lineByPath = allLines.map(l => entryPath(l) -> l).toMap
-        val qualRoot = fs.makeQualified(targetPath).toString
-        val raw = spark.read.option("basePath", target)
-          .parquet(scanLines.map(l => s"$target/${entryPath(l)}"): _*)
-          .withColumn("__m_rel",
-            expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})"))
-          .withColumn("__m_pos", col("_metadata.row_index"))
+        val byPath = all.map(e => e.path -> e).toMap
         // existing delete vectors applied FIRST: an already-retracted
         // row must neither match nor resurrect through the merge
-        val tgt = applyDeleteVectors(spark, target, scanLines, raw)
+        val tgt = positionedScan(spark, fs, target, scan)
         val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
         val t = tgt.alias("t")
         val sA = source.alias("s")
@@ -4043,8 +3716,8 @@ object Streaming {
         // range remains dir-granularity-invisible — documented; shard
         // and root layouts route appends into existing dirs, which
         // this covers.)
-        val scannedDirs = allLines.map(l => dirOf(entryPath(l))).toSet
-        if (commitMutation(spark, target, gen, lineByPath, posCk, toAdd,
+        val scannedDirs = all.map(_.dir).toSet
+        if (commitMutation(spark, target, gen, byPath, posCk, toAdd,
             stagePartitionBy,
             (if (updCk.isDefined) matchedCount else 0L) + inserted,
             extraVolatileDirs = scannedDirs,
@@ -4116,29 +3789,13 @@ object Streaming {
         throw new IllegalStateException(
           s"cannot update $target: no committed manifest (not maintained " +
             "by this module)"))
-      val allLines = manifestEntryLines(fs, target, gen)
-      if (allLines.isEmpty) return 0L
-      require(allLines.forall(_.indexOf('\t') >= 0),
-        s"updateWhere needs per-file row counts on every entry of $target — " +
-          "legacy stat-less entries present; rewrite once (clusterTable / " +
-          "compactShards) to record footer stats first")
-      val lineByPath = allLines.map(l => entryPath(l) -> l).toMap
+      val all = statsEntries(fs, target, gen, "updateWhere")
+      if (all.isEmpty) return 0L
       // candidate files: zone-map pruned for range updates (lossless
       // by construction), all otherwise — the deleteVectors shape
-      val scanLines =
-        if (ranges.isEmpty) allLines
-        else {
-          val keptPaths = zoneMapFilesAt(fs, target, gen, ranges)._1.toSet
-          allLines.filter(l => keptPaths(entryPath(l)))
-        }
-      if (scanLines.isEmpty) return 0L
-      val qualRoot = fs.makeQualified(targetPath).toString
-      val raw = spark.read.option("basePath", target)
-        .parquet(scanLines.map(l => s"$target/${entryPath(l)}"): _*)
-        .withColumn("__m_rel",
-          expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})"))
-        .withColumn("__m_pos", col("_metadata.row_index"))
-      val tgt = applyDeleteVectors(spark, target, scanLines, raw)
+      val scan = zoneMapKeep(all, ranges)
+      if (scan.isEmpty) return 0L
+      val tgt = positionedScan(spark, fs, target, scan)
       val dataCols = tgt.columns.toSeq.filterNot(c => c == "__m_rel" || c == "__m_pos")
       require(assignments.keySet.subsetOf(dataCols.toSet),
         s"updateWhere assignments reference columns absent from $target: " +
@@ -4151,7 +3808,7 @@ object Streaming {
       val positions = hits
         .select(col("__m_rel").as("rel"), col("__m_pos").as("pos"))
         .distinct().localCheckpoint()
-      if (commitMutation(spark, target, gen, lineByPath, positions,
+      if (commitMutation(spark, target, gen, all.map(e => e.path -> e).toMap, positions,
           Some(updated), stagePartitionBy, n)) {
         refreshListing(target)
         return n
@@ -4161,6 +3818,23 @@ object Streaming {
     throw new IllegalStateException(
       s"updateWhere on $target conflicted $maxAttempts times in a row — " +
         "contention on these shards is too high; serialize behind the writer lease")
+  }
+
+  /** The DV-applied scan of `entries` with each row's file and
+    * position (`__m_rel`, `__m_pos`) — the matching side of MERGE and
+    * UPDATE.
+    */
+  private def positionedScan(
+      spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: String,
+      entries: Seq[ManifestEntry]
+  ): DataFrame = {
+    val qualRoot = fs.makeQualified(new org.apache.hadoop.fs.Path(target)).toString
+    applyDeleteVectors(spark, target, entries, spark.read.option("basePath", target)
+      .parquet(entries.map(e => s"$target/${e.path}"): _*)
+      .withColumn("__m_rel", expr(s"substring(_metadata.file_path, ${qualRoot.length + 2})"))
+      .withColumn("__m_pos", col("_metadata.row_index")))
   }
 
   private def emptyPositions(
@@ -4186,7 +3860,7 @@ object Streaming {
       spark: org.apache.spark.sql.SparkSession,
       target: String,
       gen: Long,
-      lineByPath: Map[String, String],
+      byPath: Map[String, ManifestEntry],
       positions: DataFrame,
       newRows: Option[DataFrame],
       stagePartitionBy: Seq[String],
@@ -4199,17 +3873,16 @@ object Streaming {
     val touchedRels: Set[String] = positions.select("rel").distinct()
       .collect().map(_.getString(0)).toSet
     val (modified, dvDirs, sidecarOpt) =
-      if (touchedRels.isEmpty) (Seq.empty[String], Set.empty[String], None)
+      if (touchedRels.isEmpty) (Seq.empty[ManifestEntry], Set.empty[String], None)
       else {
-        val combined = withPriorDvPositions(spark, target, positions,
-          lineByPath, touchedRels)
+        val combined = withPriorDvPositions(spark, target, positions, byPath, touchedRels)
         val sidecarName = writeDvSidecar(fs, target, combined, gen + 1)
         val perFileTotal: Map[String, Long] = combined.groupBy("rel")
           .agg(count(lit(1)).as("n"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val newLines = touchedRels.toSeq.sorted
-          .map(r => withDvTag(lineByPath(r), sidecarName, perFileTotal(r)))
-        (newLines, touchedRels.map(dirOf), Some(sidecarName))
+        val retagged = touchedRels.toSeq.sorted
+          .map(r => byPath(r).withDv(sidecarName, perFileTotal(r)))
+        (retagged, touchedRels.map(dirOf), Some(sidecarName))
       }
     val token = java.util.UUID.randomUUID().toString.take(8)
     val stageName = s".__stage-$token"
@@ -4247,22 +3920,20 @@ object Streaming {
     * carry DV-tagged `~` deltas — the ones an added-files consumer
     * (followTable, the streaming source) CANNOT observe and must
     * refuse loudly over. Bloom retags are `~` too but row-neutral,
-    * hence the entryDv test. One tiny manifest read per generation.
+    * hence the DV test. One tiny manifest read per generation.
     */
   private[graft] def dvWindowGens(
       fs: org.apache.hadoop.fs.FileSystem,
       target: String,
       fromExclusive: Long,
       toInclusive: Long
-  ): Seq[Long] = {
-    val mdir = manifestDir(target)
+  ): Seq[Long] =
     ((fromExclusive + 1) to toInclusive).filter { gen =>
-      Seq(f"inc-$gen%012d", f"gen-$gen%012d")
-        .map(n => new org.apache.hadoop.fs.Path(mdir, n)).find(fs.exists)
-        .exists(p => readManifestFile(fs, p).exists(l =>
-          l.startsWith("~ ") && entryDv(l.substring(2)).isDefined))
+      generationFile(fs, target, gen).exists(p => readLines(fs, p).exists {
+        case Modify(e) => e.dv.isDefined
+        case _ => false
+      })
     }
-  }
 
   /** CHANGE DATA FEED (r18 judge #1): the ROW-LEVEL changes committed
     * in generations (`fromGen`, `toGen`] as a frame of the table's
@@ -4334,34 +4005,32 @@ object Streaming {
           .select(col("rel"), col("pos"))
       base.where(col("rel").isin(rels.toSeq: _*))
     }
-    var prevLines = manifestEntryLines(fs, target, fromGen)
+    var prevEntries = generationEntries(fs, target, fromGen)
     val perGen: Seq[DataFrame] = ((fromGen + 1) to toGen).flatMap { g =>
-      val curLines = manifestEntryLines(fs, target, g)
-      val prevByPath = prevLines.map(l => entryPath(l) -> l).toMap
-      val curByPath = curLines.map(l => entryPath(l) -> l).toMap
+      val curEntries = generationEntries(fs, target, g)
+      val prevByPath = prevEntries.map(e => e.path -> e).toMap
+      val curByPath = curEntries.map(e => e.path -> e).toMap
       val removed = prevByPath.keySet -- curByPath.keySet
       if (removed.nonEmpty) throw new IllegalStateException(
         s"change feed on $target cannot attribute generation $g: it REMOVES " +
           s"${removed.size} file(s) (compaction / rewrite), which carries no " +
           "row-level change information — consume mutation-verb windows only, " +
           "or re-bootstrap the subscriber across the rewrite")
-      val addedLines = curLines.filterNot(l => prevByPath.contains(entryPath(l)))
+      val added = curEntries.filterNot(e => prevByPath.contains(e.path))
       val inserts: Option[DataFrame] =
-        if (addedLines.isEmpty) None
-        else Some(applyDeleteVectors(spark, target, addedLines,
-          spark.read.option("basePath", target).option("mergeSchema", "true")
-            .parquet(addedLines.map(l => s"$target/${entryPath(l)}"): _*))
+        if (added.isEmpty) None
+        else Some(readEntries(spark, target, added, mergeSchema = true)
           .withColumn("_change_type", lit("insert"))
           .withColumn("_commit_generation", lit(g)))
       // files present in BOTH whose dv tag changed: merge-on-write
       // sidecars only ever grow, so tag-changed == positions grew
       val dvChanged: Set[String] = (curByPath.keySet & prevByPath.keySet)
-        .filter(p => entryDv(curByPath(p)) != entryDv(prevByPath(p)))
+        .filter(p => curByPath(p).dv != prevByPath(p).dv)
       val deletes: Option[DataFrame] =
         if (dvChanged.isEmpty) None
         else {
-          val newRefs = dvChanged.toSeq.flatMap(p => entryDv(curByPath(p)).map(_._1)).distinct
-          val oldRefs = dvChanged.toSeq.flatMap(p => entryDv(prevByPath(p)).map(_._1)).distinct
+          val newRefs = dvChanged.toSeq.flatMap(p => curByPath(p).dv.map(_._1)).distinct
+          val oldRefs = dvChanged.toSeq.flatMap(p => prevByPath(p).dv.map(_._1)).distinct
           val delta = dvPositions(newRefs, dvChanged)
             .join(dvPositions(oldRefs, dvChanged), Seq("rel", "pos"), "left_anti")
             .select(col("rel").as("__cdf_rel"), col("pos").as("__cdf_pos"))
@@ -4382,7 +4051,7 @@ object Streaming {
               .withColumn("_commit_generation", lit(g)))
           }
         }
-      prevLines = curLines
+      prevEntries = curEntries
       deletes.toSeq ++ inserts.toSeq
     }
     perGen.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))

@@ -85,6 +85,41 @@ class GraftConnectorSpec extends AnyFunSuite with Matchers with SparkSessionSetu
         .select("id")).count() shouldBe 0L
   }
 
+  test("a connector read resolves its generation's entries ONCE per file index; " +
+      "every pruning tier and the DV gate run on them") {
+    val target = seedClustered("graft-conn-once")
+    Streaming.buildBloomIndex(spark, target, "name") should be > 0
+    CountingLocalFs.install(spark.sparkContext.hadoopConfiguration)
+    val counted = s"${CountingLocalFs.Scheme}://$target"
+    val cfs = new Path(counted).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def manifestReads(): Int = CountingLocalFs.count("gen-", "inc-", "m-")
+    // one standalone resolution: the manifest files a generation needs
+    val r0 = manifestReads()
+    val gen = Streaming.manifestGenerations(cfs, counted).last
+    Streaming.manifestEntries(cfs, counted, gen).size shouldBe 16
+    val once = manifestReads() - r0
+    once should be > 0
+    val r1 = manifestReads()
+    val idx = new GraftFileIndex(spark, counted, None)
+    manifestReads() - r1 shouldBe once
+    import org.apache.spark.sql.catalyst.expressions.{
+      AttributeReference, EqualTo, GreaterThanOrEqual, IsNotNull, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val id = AttributeReference("id", LongType)()
+    val name = AttributeReference("name", StringType)()
+    val r2 = manifestReads()
+    // zone maps, blooms and null counts all prune in one listing
+    val dirs = idx.listFiles(Nil, Seq(
+      GreaterThanOrEqual(id, Literal(100L)), LessThanOrEqual(id, Literal(199L)),
+      EqualTo(name, Literal("name-0150")), IsNotNull(id)))
+    manifestReads() - r2 shouldBe 0
+    val (kept, total) = idx.lastPruning.get
+    total shouldBe 16
+    kept should be >= 1
+    kept should be < 4
+    dirs.map(_.files.size).sum shouldBe kept
+  }
+
   test("point lookups (=, IN) and one-sided ranges prune too") {
     val target = seedClustered("graft-conn-point")
     val eq = spark.read.format("graft").load(target).where(col("id") === 37L)

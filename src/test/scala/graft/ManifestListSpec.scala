@@ -130,6 +130,16 @@ class ManifestListSpec extends AnyFunSuite with Matchers with SparkSessionSetup 
     (0L until 80L).foreach { k =>
       got(k) shouldBe (if (k % 8 == 0) s"v8-$k" else s"v1-$k")
     }
+    // the legacy shards' entries are still bare `path` lines; a bloom
+    // build tags them `path\tbl:<col>:<sidecar>` (a tag where the row
+    // count would be), and the metadata row counts must read "unknown",
+    // never parse the tag as a count
+    Streaming.buildBloomIndex(spark, target, "doc_id") should be > 0
+    Streaming.statsRowCount(fs, target) shouldBe None
+    Streaming.committedDirRowCounts(fs, target) shouldBe None
+    val latest = Streaming.tableHistory(spark, target).orderBy(col("generation").desc).head()
+    latest.isNullAt(latest.fieldIndex("live_rows")) shouldBe true
+    Streaming.readCommitted(spark, target).count() shouldBe 80L
   }
 
   test("optimistic conflict detection stays exact ACROSS a checkpoint generation: " +
